@@ -1,6 +1,6 @@
 package graft.dedup
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Caching._
@@ -1236,9 +1236,13 @@ object Dedup {
     * one groupBy — correct but one full shuffle of the token rows.)
     */
   def simhash(spark: SparkSession, docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"),
-      graft.functions.SimHash60.simhash(array_distinct(tokens(col("text"))))
-        .as("simhash"))
+    docs.select(col("doc_id"), simhashOf(col("text")).as("simhash"))
+
+  /** The [[simhash]] signature of one text column as a bare per-row
+    * expression, for projections that compute it beside other signals.
+    */
+  private[graft] def simhashOf(text: Column): Column =
+    graft.functions.SimHash60.simhash(array_distinct(tokens(text)))
 
   /** Widening schedule for the df-capped simhash variants: a band's
     * 15-bit key can be extended in 5-bit chunks drawn from the OTHER
@@ -1566,8 +1570,17 @@ object Dedup {
     * keep = 1 iff doc_id == cluster_id.
     */
   def simhashClusters(spark: SparkSession, docs: DataFrame,
-                      maxHamming: Int, maxDf: Int): DataFrame = {
-    val sim = simhash(spark, docs).cachedOnce
+                      maxHamming: Int, maxDf: Int): DataFrame =
+    simhashClustersOf(spark, simhash(spark, docs).cachedOnce, maxHamming, maxDf)
+      .orderBy(col("doc_id"))
+
+  /** [[simhashClusters]] over precomputed (doc_id, simhash) rows, without
+    * the presentation sort — for callers that already hold the
+    * signatures. `sim` is read twice (the groups and the final
+    * assignment); the caller caches it when it is costly to recompute.
+    */
+  private[graft] def simhashClustersOf(spark: SparkSession, sim: DataFrame,
+                                       maxHamming: Int, maxDf: Int): DataFrame = {
     // groups: referenced by the rep join and the final assignment
     val groups = sim.groupBy(col("simhash")).agg(min(col("doc_id")).as("rep")).cachedOnce
     val sigPairs = cappedSigPairs(spark, groups.select("simhash"), maxHamming, maxDf)
@@ -1591,7 +1604,6 @@ object Dedup {
         coalesce(col("cluster_id"), col("doc_id")).as("cluster_id"))
       .select(col("doc_id"), col("cluster_id"),
         when(col("doc_id") === col("cluster_id"), 1L).otherwise(0L).as("keep"))
-      .orderBy(col("doc_id"))
   }
 
   def simhashPairs(spark: SparkSession, docs: DataFrame, maxHamming: Int): DataFrame = {

@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.core.Caching._
@@ -21,17 +22,26 @@ import graft.text.Analysis
   *   3. exact_dup — not the min-doc_id keeper of its md5(text) group
   *                  (computed among stage-1/2 survivors).
   *   4. near_dup  — simhash star-cluster non-representative
-  *                  (Dedup.simhashClusters over the exact keepers).
+  *                  (the [[Dedup.simhashClusters]] rule over the exact
+  *                  keepers).
   *   5. kept      — survived everything; `kept` = 1.
   *
-  * Distributed shape: per-doc signals join on doc_id (co-partitioned
-  * shuffles); the only pairwise work is the df-capped simhash band join
-  * inherited from Dedup — already bounded per bucket regardless of
-  * corpus size. Output is O(n) rows (doc_id, kept, reason).
+  * Distributed shape: the corpus is scanned ONCE, in one projection
+  * computing per doc the two gate booleans and, for gate survivors only,
+  * md5(text) and the SimHash60 signature. The exact keeper (a window
+  * min over md5) rides that projection's one exchange, and the result
+  * is cached as a narrow per-doc table — the text column is never
+  * cached. Every later stage reads only that table: the near-dup stage
+  * clusters the keepers' signatures, and the decision table is the
+  * union of the per-row verdicts (quality, language, exact_dup) and the
+  * cluster verdicts — no join back onto the corpus. The only pairwise
+  * work is the df-capped simhash band join inherited from Dedup,
+  * bounded per bucket regardless of corpus size. Output is O(n) rows
+  * (doc_id, kept, reason).
   */
 object Curation {
 
-  /** Cache lifecycle: the narrow gate/keeper intermediates below are
+  /** Cache lifecycle: the narrow signal/keeper intermediates below are
     * cached for the plan's double consumption and not unpersisted — a
     * long-lived session should `spark.catalog.clearCache()` between
     * invocations (see the note on [[graft.dedup.Dedup]]).
@@ -50,45 +60,37 @@ object Curation {
   private def curateCore(spark: SparkSession, docs: DataFrame,
                          minScore: Double, minTokens: Int, keepLang: String,
                          maxHamming: Int, maxDf: Int): DataFrame = {
-    // stages 1+2 are per-row functions of text: ONE scan computes both
-    // gate booleans (Analysis.withGateCols) — r12: the previous shape
-    // joined TWO corpus-wide projections (quality ⋈ langId on doc_id)
-    // and then joined the text back against the narrow gate table; both
-    // joins disappear (guide §2.4 — a per-row predicate never needs a
-    // shuffle). Every cached/reused intermediate stays NARROW (ids +
-    // flags) — the text column is never cached; each stage that needs
-    // it re-reads the column-pruned scan, the only shape that survives
-    // a 100 TB corpus (gates: 1 long + 2 booleans per doc).
-    val staged = Analysis.withGateCols(docs, minScore, minTokens, keepLang)
-    val gates = staged.select(col("doc_id"), col("q_pass"), col("l_pass"))
+    // the one corpus scan: gates for every doc, dedup signals for the
+    // gate survivors (null otherwise). The gate booleans are referenced
+    // several times here, so Catalyst keeps them in their own projection
+    // rather than inlining the token aggregates into each reference.
+    val pass = col("q_pass") && col("l_pass")
+    val sig = Analysis.withGateCols(docs, minScore, minTokens, keepLang)
+      .select(col("doc_id"), col("q_pass"), col("l_pass"),
+        when(pass, md5(col("text"))).as("content_md5"),
+        when(pass, Dedup.simhashOf(col("text"))).as("simhash"))
+    // stage 3 rides the same exchange: min doc_id per content hash among
+    // the survivors, as a window, so no join back. A gate failure has no
+    // md5 and is keyed by its own doc_id instead — a singleton window,
+    // never one hot null partition. Cached narrow (no text), read by the
+    // per-row verdicts and twice by the near-dup stage.
+    val decided = sig
+      .select(col("doc_id"), col("q_pass"), col("l_pass"), col("simhash"),
+        min(col("doc_id"))
+          .over(Window.partitionBy(col("content_md5"), when(!pass, col("doc_id"))))
+          .as("keep_id"))
       .cachedOnce
-    // gate-survivor keeper: min doc_id per content hash. The gate is
-    // re-evaluated per-row on the survivor scan instead of joining the
-    // cached gate table back onto text — recomputing two token-array
-    // aggregates per row is far cheaper at any scale than shuffling
-    // the corpus text by doc_id.
-    val sv = staged.filter(col("q_pass") && col("l_pass"))
-      .select(col("doc_id"), md5(col("text")).as("content_md5"))
-    val keepers = sv.groupBy(col("content_md5")).agg(min(col("doc_id")).as("keep_id"))
-    // consumed twice (near-dup input + final reason join): 2 longs/doc
-    val exKeep = sv.join(keepers, "content_md5")
-      .select(col("doc_id"), col("keep_id"))
-      .cachedOnce
-    val keeperDocs = docs.select(col("doc_id"), col("text"))
-      .join(exKeep.filter(col("doc_id") === col("keep_id")).select(col("doc_id")), "doc_id")
-    val nd = Dedup.simhashClusters(spark, keeperDocs, maxHamming, maxDf)
-      .select(col("doc_id"), col("keep").as("nd_keep"))
-    // null keep_id/nd_keep = the doc never reached that stage; the
-    // CASE's earlier arms have already claimed it
-    gates
-      .join(exKeep, Seq("doc_id"), "left")
-      .join(nd, Seq("doc_id"), "left")
-      .withColumn("reason",
-        when(!col("q_pass"), "quality")
-          .when(!col("l_pass"), "language")
-          .when(col("doc_id") =!= col("keep_id"), "exact_dup")
-          .when(col("nd_keep") === 0, "near_dup")
-          .otherwise("kept"))
+    val keeper = pass && col("doc_id") === col("keep_id")
+    val early = decided.filter(!keeper)
+      .select(col("doc_id"),
+        when(!col("q_pass"), "quality").when(!col("l_pass"), "language")
+          .otherwise("exact_dup").as("reason"))
+    // stage 4 over the exact keepers' signatures: one row per keeper
+    val nearDup = Dedup.simhashClustersOf(spark,
+        decided.filter(keeper).select(col("doc_id"), col("simhash")),
+        maxHamming, maxDf)
+      .select(col("doc_id"), when(col("keep") === 1L, "kept").otherwise("near_dup").as("reason"))
+    early.unionByName(nearDup)
       .select(col("doc_id"),
         when(col("reason") === "kept", 1L).otherwise(0L).as("kept"),
         col("reason"))
@@ -104,7 +106,8 @@ object Curation {
     * only on what would actually ship — the same
     * cheapest-gate-first ordering as the base stages; the shingle df
     * cap is computed over the survivor corpus, exactly the semantics
-    * of running the F15 operator on the curated set).
+    * of running the F15 operator on the curated set). The survivors'
+    * text is the pipeline's only corpus read besides the signal scan.
     *
     * A benchmark item drawn from the corpus itself is flagged BY
     * DESIGN (it shares all its shingles with its eval twin): the

@@ -120,11 +120,12 @@ object Analysis {
   /** F14 stages 1+2 as per-row BOOLEAN gate columns: (doc_id, text,
     * q_pass, l_pass) in ONE corpus scan — the same signals as
     * [[qualityGateRows]] (scoreSignals + the stopword-argmax language),
-    * kept as booleans so [[graft.ops.Curation]] can both filter
-    * survivors per-row and project the narrow (doc_id, q_pass, l_pass)
-    * gate table WITHOUT joining two scans of the corpus on doc_id
-    * (optimization r12: the old quality⋈langId join shuffled two
-    * corpus-wide projections to compute two per-row functions).
+    * kept as booleans so [[graft.ops.Curation]] can compute the
+    * survivors' dedup signals from `text` in the same projection and
+    * cache only the narrow per-doc result — no join of two corpus
+    * scans on doc_id (optimization r12: the old quality⋈langId join
+    * shuffled two corpus-wide projections to compute two per-row
+    * functions).
     * Null score/n_tokens (null-text doc) FAILS quality — a null gate
     * would mislabel the doc (the [[qualityGateRows]] rule).
     */

@@ -57,6 +57,18 @@ object Conf {
     out.map { case (n, ps) => Section(n, ps.toSeq) }.toSeq
   }
 
+  /** A bundled configuration file (`Configuration/<name>` on the
+    * classpath): the storage-schemas, storage-aggregation and
+    * DataTranslation rule sets plus the two all-comment `.example`
+    * files, the inputs the parsers and the A6 `conf_rules` query are
+    * pinned against.
+    */
+  def bundled(name: String): String = {
+    val in = getClass.getResourceAsStream(s"/Configuration/$name")
+    require(in != null, s"no bundled configuration file Configuration/$name")
+    try new String(in.readAllBytes(), "UTF-8") finally in.close()
+  }
+
   /** storage-schemas.conf → ordered first-match schema rules
     * (pattern, retentions). Sections missing either field are skipped,
     * like the reference's nil-pattern guard (L_DataCache.lua:72).

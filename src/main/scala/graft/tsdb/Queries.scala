@@ -441,7 +441,7 @@ object Queries {
       .orderBy(col("path"), col("idx"))
 
   /** A6: the parsed conf RULE TABLES as rows (VERDICT r10 #8) — the
-    * reference's own Configuration files (storage-schemas,
+    * bundled Configuration files ([[Conf.bundled]]: storage-schemas,
     * storage-aggregation, DataTranslation, rewrite-rules.conf.example)
     * through the Conf parsers, one row per rule in file order. The
     * DuckDB oracle is a VALUES literal of the expected tables — the
@@ -451,21 +451,18 @@ object Queries {
     * string to keep one column type).
     */
   def confRules(spark: SparkSession, dir: String): DataFrame = {
-    def ref(name: String): String =
-      new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("/root/reference/Configuration", name)), "UTF-8")
-    val schemas = Conf.storageSchemas(ref("storage-schemas.conf"))
+    val schemas = Conf.storageSchemas(Conf.bundled("storage-schemas.conf"))
       .zipWithIndex.map { case (r, i) =>
         ("schema", i.toLong, r.name, r.pattern, r.retentions, "") }
-    val aggs = Conf.storageAggregation(ref("storage-aggregation.conf"))
+    val aggs = Conf.storageAggregation(Conf.bundled("storage-aggregation.conf"))
       .zipWithIndex.map { case (r, i) =>
         ("agg", i.toLong, r.name, r.pattern, r.aggregationMethod,
           f"${r.xFilesFactor}%.4f") }
-    val (pre, post) = Conf.rewriteRules(ref("rewrite-rules.conf.example"))
+    val (pre, post) = Conf.rewriteRules(Conf.bundled("rewrite-rules.conf.example"))
     val rw = (pre.map(("rewrite_pre", _)) ++ post.map(("rewrite_post", _)))
       .zipWithIndex.map { case ((kind, r), i) =>
         (kind, i.toLong, "", r.pattern, r.replacement, "") }
-    val trans = Conf.translation(ref("DataTranslation.conf")).toSeq
+    val trans = Conf.translation(Conf.bundled("DataTranslation.conf")).toSeq
       .flatMap { case (tag, table) => table.toSeq.map { case (from, to) =>
         ("translation", -1L, tag, from, to, "") } }
       .sortBy(t => (t._3, t._4))

@@ -2170,6 +2170,102 @@ class LlmSpec extends SparkSpec {
       (3L, 0L, "exact_dup")))
   }
 
+  test("curation equals its stage-by-stage reference at 1, 3 and default shuffle partitions (F14/F14b)") {
+    import graft.ops.Curation
+    // hand-built corpus exercising every stage: English originals,
+    // planted byte-identical copies, same-token-set near copies (equal
+    // simhash, different md5), German/Spanish docs, short docs, a
+    // null-text doc, and eval items that leak a kept doc and an exact
+    // copy (the copy must stay 'exact_dup')
+    val vocab = (0 until 200).map(i => s"w${i}x")
+    val en = TextFns.stopwords("en")
+    def doc(seed: Int, n: Int, stop: Seq[String]): String =
+      (0 until n).map { k =>
+        val h = ((seed * 2654435761L + k * 40503L) % 99991).toInt
+        if (h % 3 == 0) stop(h % stop.size) else vocab(h % vocab.size)
+      }.mkString(" ")
+    val originals = (0 until 30).map(i => i.toLong -> doc(i, 18 + i % 20, en))
+    val exact = (0 until 6).map(i => (100L + i) -> originals(i * 4)._2)
+    val near = (0 until 6).map { i =>
+      val w = originals(i * 4 + 1)._2.split(" ")
+      (200L + i) -> (w ++ w.take(3)).mkString(" ")
+    }
+    // byte-identical copies of gate failures keep their gate reason
+    val foreign = Seq(300L -> doc(3, 25, TextFns.stopwords("de")),
+      301L -> doc(4, 25, TextFns.stopwords("es")), 302L -> doc(3, 25, TextFns.stopwords("de")))
+    val short = Seq(400L -> doc(5, 6, en), 401L -> "the", 402L -> "the")
+    val rows = (originals ++ exact ++ near ++ foreign ++ short)
+      .map { case (id, t) => (id, Option(t)) } :+ (500L -> Option.empty[String])
+    val cur = spark.sparkContext.parallelize(rows, 3).toDF("doc_id", "text")
+    val eval = Seq(900L -> originals(2)._2, 901L -> exact(0)._2,
+      902L -> "an unrelated benchmark item about none of the corpus words at all")
+      .toDF("eval_id", "text")
+    val (minScore, minTokens, maxHamming, maxDf) = (0.3, 15, 6, 64)
+    val (ngram, minHits, decontamMaxDf) = (5, 3, 64)
+
+    // reference: the public operators chained stage by stage, each
+    // stage collected before the next runs
+    def reference(): (Map[Long, (Long, String)], Map[Long, (Long, String)]) = {
+      val staged = Analysis.withGateCols(cur, minScore, minTokens, "en")
+      val gates = staged.collect()
+        .map(r => r.getLong(0) -> (r.getBoolean(2), r.getBoolean(3))).toMap
+      val survivors = staged.filter($"q_pass" && $"l_pass").select($"doc_id", $"text")
+      val keepOf = survivors.select($"doc_id", md5($"text").as("content_md5"))
+        .join(Dedup.exact(survivors), "content_md5").collect()
+        .map(r => r.getLong(1) -> r.getLong(2)).toMap
+      val keepers = keepOf.collect { case (id, k) if id == k => id }.toSeq
+      val nd = Dedup.simhashClusters(spark, survivors.filter($"doc_id".isin(keepers: _*)),
+          maxHamming, maxDf).collect()
+        .map(r => r.getLong(0) -> r.getLong(2)).toMap
+      val base = gates.map { case (id, (q, l)) =>
+        val reason =
+          if (!q) "quality" else if (!l) "language"
+          else if (keepOf(id) != id) "exact_dup"
+          else if (nd(id) == 0L) "near_dup" else "kept"
+        id -> ((if (reason == "kept") 1L else 0L, reason))
+      }
+      val kept = base.collect { case (id, (1L, _)) => id }.toSeq
+      val leaked = Dedup.decontaminate(cur.filter($"doc_id".isin(kept: _*)), eval,
+          ngram, minHits, decontamMaxDf)
+        .select($"doc_id").collect().map(_.getLong(0)).toSet
+      (base, base.map { case (id, d) => id -> (if (leaked(id)) (0L, "contaminated") else d) })
+    }
+    def asMap(df: org.apache.spark.sql.DataFrame): Map[Long, (Long, String)] = {
+      val out = df.collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getString(2))))
+      assert(out.map(_._1).toSeq == out.map(_._1).toSeq.sorted, "output sorted by doc_id")
+      assert(out.length == rows.length, "one decision per doc")
+      out.toMap
+    }
+
+    val conf = spark.conf
+    val default = conf.get("spark.sql.shuffle.partitions")
+    try {
+      for (parts <- Seq("1", "3", default)) {
+        conf.set("spark.sql.shuffle.partitions", parts)
+        // a cached stage from the previous width would mask this one's plan
+        spark.catalog.clearCache()
+        val (wantBase, wantFull) = reference()
+        spark.catalog.clearCache()
+        val gotBase = asMap(Curation.curate(spark, cur, minScore, minTokens, "en",
+          maxHamming, maxDf))
+        spark.catalog.clearCache()
+        val gotFull = asMap(Curation.curateWithDecontam(spark, cur, eval, minScore,
+          minTokens, "en", maxHamming, maxDf, ngram, minHits, decontamMaxDf))
+        assert(gotBase == wantBase, s"curate at $parts partitions")
+        assert(gotFull == wantFull, s"curateWithDecontam at $parts partitions")
+        // the corpus reaches every stage, so no branch is vacuous
+        assert(wantFull.values.map(_._2).toSet ==
+          Set("quality", "language", "exact_dup", "near_dup", "kept", "contaminated"))
+        assert(wantFull(500L) == ((0L, "quality")))
+        assert(wantFull(100L) == ((0L, "exact_dup")))
+        assert(wantFull(302L) == ((0L, "language")) && wantFull(402L) == ((0L, "quality")))
+      }
+    } finally {
+      conf.set("spark.sql.shuffle.partitions", default)
+      spark.catalog.clearCache()
+    }
+  }
+
   test("corpus curation on real documents: partition + gate consistency (F14)") {
     val L = graft.ops.LlmQueries
     val out = L.corpusCuration(spark, "/root/testdata/sf0.001")

@@ -579,6 +579,38 @@ class PlanAuditSpec extends SparkSpec {
     assert(!ca.contains("Join"), ca.take(3000))
   }
 
+  test("curateWithDecontam reads the corpus text in at most two scans") {
+    // the single-scan curation shape: one narrow signal projection
+    // feeds the gate, exact-dup and near-dup stages; the only other
+    // read of the corpus text is stage 5's survivor scan. A cached
+    // intermediate's plan is walked once, however often it is read.
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import spark.implicits._
+    val L = graft.ops.LlmQueries
+    spark.catalog.clearCache()
+    // the eval side is a local relation, so every parquet scan that
+    // reads `text` is a corpus scan
+    val eval = Seq((0L, "an eval item that is not in the corpus")).toDF("eval_id", "text")
+    val df = graft.ops.Curation.curateWithDecontam(spark,
+      graft.core.Tables.documents(spark, dir), eval,
+      L.CurationMinScore, L.CurationMinTokens, L.CurationLang,
+      L.SimhashMaxHamming, L.SimhashMaxDf, L.DecontamN, L.DecontamMinHits, L.DecontamMaxDf)
+    val walked = scala.collection.mutable.Set.empty[AnyRef]
+    def textScans(p: SparkPlan): Int = p match {
+      case a: AdaptiveSparkPlanExec => textScans(a.executedPlan)
+      case m: InMemoryTableScanExec =>
+        if (walked.add(m.relation.cacheBuilder)) textScans(m.relation.cachedPlan) else 0
+      case f: FileSourceScanExec => if (f.output.exists(_.name == "text")) 1 else 0
+      case other => other.children.map(textScans).sum
+    }
+    val plan = df.queryExecution.executedPlan
+    val scans = textScans(plan)
+    spark.catalog.clearCache()
+    assert(scans >= 1 && scans <= 2, s"$scans corpus text scans:\n${plan.toString.take(4000)}")
+  }
+
   test("no unbounded cartesian product in any driver query") {
     // broadcast nested-loop joins over bounded broadcasts (band index,
     // centroid codebook, query subset, 1-row bounds) are fine; a

@@ -24,9 +24,7 @@ class AggregatorSpec extends SparkSpec {
       "<env>.applications.<app>.all.requests", 60L, "sum",
       "<env>.applications.<app>.*.requests"))
     // the shipped .example is ALL comments — zero rules IS the parse
-    val ref = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("/root/reference/Configuration",
-        "aggregation-rules.conf.example")), "UTF-8")
+    val ref = Conf.bundled("aggregation-rules.conf.example")
     assert(Conf.aggregationRules(ref).isEmpty)
   }
 

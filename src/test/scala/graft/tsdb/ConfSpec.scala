@@ -3,15 +3,13 @@ package graft.tsdb
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
-/** Graphite .conf parsing against the reference's OWN configuration
-  * files (under /root/reference/Configuration), plus the two-file
-  * first-match storage lookup (L_DataCache.lua:147-159).
+/** Graphite .conf parsing against the bundled configuration files
+  * (`Configuration/` on the classpath, [[Conf.bundled]]), plus the
+  * two-file first-match storage lookup (L_DataCache.lua:147-159).
   */
 class ConfSpec extends SparkSpec {
 
-  private def ref(name: String): String =
-    new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("/root/reference/Configuration", name)), "UTF-8")
+  private def ref(name: String): String = Conf.bundled(name)
 
   test("storage-schemas.conf: all 17 rules, in file order") {
     val rules = Conf.storageSchemas(ref("storage-schemas.conf"))
