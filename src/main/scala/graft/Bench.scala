@@ -1,23 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.core.Sessions
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Warm the session (codegen, parquet footers, FS cache) so the
-    // first timed query doesn't absorb ~10s of one-time startup cost.
-    try {
-      spark.read.parquet(s"$sfDir/lineitem.parquet").count()
-      graft.core.Tables.metrics(spark, sfDir).count()
-    } catch { case _: Throwable => () }
+    val cpus = Sessions.cpus
+    val spark = Sessions.local(cpus)
+    Sessions.warm(spark, sfDir)
     // Sorted order → stable per-query attribution across rounds.
     // noop write executes the FULL plan (count() lets Catalyst prune
     // projects/sorts, understating materialization cost).
@@ -70,9 +58,7 @@ object Bench {
         // timed section): a repeat must re-run the full plan, not read
         // the previous sample's cache — and a 52-query session must not
         // accumulate executor storage (VERDICT r2 cache hygiene)
-        spark.catalog.clearCache()
-        // RDD-level persists are not covered by catalog.clearCache
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+        Sessions.reset(spark)
       }
       // single-JVM contamination fix (VERDICT r12 #2): 277 queries in one
       // JVM accumulate heap garbage (broadcasts, codegen classes, fixture

@@ -1,20 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.core.Sessions
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_ONLY=a,b,c restricts to named queries (dev loops);
     // unset (the driver) = everything
@@ -30,11 +22,8 @@ object Verify {
         System.err.println(s"[verify] $name FAILED: ${e.getClass.getSimpleName}: ${e.getMessage}")
       }
       // per-query cache lifecycle (VERDICT r2 cache hygiene): drop
-      // cached intermediates so the 52-query session doesn't accumulate
-      spark.catalog.clearCache()
-      // localCheckpoint persists live at the RDD level, outside the
-      // catalog — drop those too or the 277-query session accumulates
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      // cached intermediates so the 277-query session doesn't accumulate
+      Sessions.reset(spark)
     }
     // end-of-run summary so a broken query can't hide mid-scroll
     if (failed.nonEmpty)

@@ -60,7 +60,7 @@ object Tables {
     * timestamp precision/zone ambiguity.
     *
     * Mirrors the reference's metric naming `<host>.<dev>.<srv>.<var>`
-    * (/root/reference/L_DataWatcher.lua:72-73).
+    * (L_DataWatcher.lua:72-73).
     */
   def metrics(spark: SparkSession, dir: String): DataFrame =
     events(spark, dir).select(

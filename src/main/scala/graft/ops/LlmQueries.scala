@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Fixtures, Tables}
 import graft.dedup.Dedup
 import graft.similarity.Ann
 import graft.text.Analysis
@@ -648,26 +648,6 @@ object LlmQueries {
   private def annIndexParams = graft.similarity.AnnIndex.Params(
     IvfCentroids, IvfProbe, PqSubspaces, PqCodes, PqTrainIters, PqTrainBp)
 
-  /** Write-once-per-process artifact root (the store/fixture-query
-    * convention): the index builds on first use and later invocations
-    * in the same JVM — bench repeat samples — reuse it, so the bench
-    * measures the steady-state SEARCH (the production serving metric;
-    * the build is an offline artifact). Deterministic, so reuse ≡
-    * rebuild.
-    */
-  private def annIndexRootOnce(tag: String, dir: String)
-                              (build: String => Unit): String = {
-    val root = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_${tag}_${ProcessHandle.current().pid()}",
-      dir.stripPrefix("/").replaceAll("[^A-Za-z0-9.]", "_")).toString
-    val marker = java.nio.file.Paths.get(root, "_GRAFT_ANNIDX_OK")
-    if (!java.nio.file.Files.exists(marker)) {
-      build(root)
-      java.nio.file.Files.writeString(marker, "ok")
-    }
-    root
-  }
-
   /** F60: epoch-pinned search through the PERSISTED IVFPQ index — the
     * full lifecycle in one query: build (train + encode + publish
     * epoch 1), load via the ready-marker pointer, search through the
@@ -680,7 +660,7 @@ object LlmQueries {
   def annIndexSearch(spark: SparkSession, dir: String): DataFrame = {
     import graft.similarity.AnnIndex
     val e = Tables.embeddings(spark, dir)
-    val root = annIndexRootOnce("annidx", dir)(r =>
+    val root = Fixtures.once("annidx", dir)(r =>
       AnnIndex.build(spark, e, annIndexParams, r): Unit)
     val idx = AnnIndex.load(spark, root) // pins currentEpoch = 1
     AnnIndex.search(e.filter(col("vec_id") < AnnQueryMax), idx, AnnK)
@@ -697,7 +677,7 @@ object LlmQueries {
   def annIndexRefresh(spark: SparkSession, dir: String): DataFrame = {
     import graft.similarity.AnnIndex
     val e = Tables.embeddings(spark, dir)
-    val root = annIndexRootOnce("annidx_refresh", dir) { r =>
+    val root = Fixtures.once("annidx_refresh", dir) { r =>
       AnnIndex.build(spark, e.filter(col("vec_id") % 3 =!= 0),
         annIndexParams, r)
       AnnIndex.extend(spark, r, e.filter(col("vec_id") % 3 === 0)): Unit
@@ -718,7 +698,7 @@ object LlmQueries {
   def annIndexCompacted(spark: SparkSession, dir: String): DataFrame = {
     import graft.similarity.AnnIndex
     val e = Tables.embeddings(spark, dir)
-    val root = annIndexRootOnce("annidx_compact", dir) { r =>
+    val root = Fixtures.once("annidx_compact", dir) { r =>
       AnnIndex.build(spark, e.filter(col("vec_id") % 3 =!= 0),
         annIndexParams, r)
       AnnIndex.extend(spark, r, e.filter(col("vec_id") % 3 === 0))
@@ -742,7 +722,7 @@ object LlmQueries {
   def annIndexDeleted(spark: SparkSession, dir: String): DataFrame = {
     import graft.similarity.AnnIndex
     val e = Tables.embeddings(spark, dir)
-    val root = annIndexRootOnce("annidx_delete", dir) { r =>
+    val root = Fixtures.once("annidx_delete", dir) { r =>
       AnnIndex.build(spark, e, annIndexParams, r)
       AnnIndex.delete(spark, r,
         e.filter(col("vec_id") % 17 === 0).select(col("vec_id")))
@@ -767,7 +747,7 @@ object LlmQueries {
   def annIndexCutover(spark: SparkSession, dir: String): DataFrame = {
     import graft.similarity.AnnIndex
     val e = Tables.embeddings(spark, dir)
-    val alias = annIndexRootOnce("annidx_cutover", dir) { a =>
+    val alias = Fixtures.once("annidx_cutover", dir) { a =>
       AnnIndex.build(spark, e.filter(col("vec_id") % 3 =!= 0),
         annIndexParams, s"$a/roots/r1")
       AnnIndex.cutover(spark, a, s"$a/roots/r1")

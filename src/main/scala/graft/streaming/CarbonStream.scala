@@ -7,7 +7,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 import graft.tsdb.{Carbon, Rollup}
 
 /** Structured-Streaming re-expression of the carbon-cache ingest loop
-  * (/root/reference/L_DataCache.lua:161-200): plaintext lines → parse →
+  * (L_DataCache.lua:161-200): plaintext lines → parse →
   * event-time watermark → windowed rollup aggregation.
   *
   * The same plan builds from a batch OR streaming source (`lines` from
@@ -308,7 +308,7 @@ object CarbonStream {
     b.unpersist()
   }
 
-  /** The DataUser hook (/root/reference/L_DataUser.lua:24-36): a
+  /** The DataUser hook (L_DataUser.lua:24-36): a
     * user-defined stage run for EVERY incoming metric before storage —
     * it may drop the point, rewrite metric/value/time, or fan out into
     * several points (the reference's iterator protocol: yield until

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.similarity.{Ann, AnnIndex}
@@ -17,10 +17,7 @@ import graft.similarity.{Ann, AnnIndex}
   */
 object DriftProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Sessions.local()
     val sf = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val base = graft.core.Tables.embeddings(spark, sf)
       .select(col("vec_id"), col("embedding"))
@@ -51,7 +48,7 @@ object DriftProbe {
       val corpus = base.unionByName(delta)
       val queries = delta.filter(col("vec_id") < 1000000L + nQ)
       val exact = Ann.bruteTopK(queries, corpus, k).cache()
-      val tmp = java.nio.file.Files.createTempDirectory("driftprobe").toString
+      val tmp = graft.core.Fixtures.fresh("driftprobe")
       // frozen: books trained on base only, delta extended under them
       AnnIndex.build(spark, base, params, s"$tmp/roots/r1")
       AnnIndex.cutover(spark, tmp, s"$tmp/roots/r1")

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Fixture search for the F15c perturbed-copy spec: find a 24-token
@@ -16,10 +15,7 @@ import org.apache.spark.sql.functions._
   */
 object FuzzyProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Sessions.local()
     import spark.implicits._
 
     def perturb(toks: Vector[String]): Vector[String] =

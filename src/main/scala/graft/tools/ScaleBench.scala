@@ -101,13 +101,7 @@ object ScaleBench {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.Sessions.local()
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val base = graft.core.Tables.documents(spark, dir)
     val ebase = graft.core.Tables.embeddings(spark, dir)

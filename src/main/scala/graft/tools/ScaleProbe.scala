@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-growth probe for the df-capped candidate generators
@@ -33,16 +33,9 @@ object ScaleProbe {
     sum(col(dfCol) * (col(dfCol) - 1) / 2).cast("long")
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // heap must come from the LAUNCHER (e.g. SBT_OPTS=-Xmx16g):
-      // spark.driver.memory set here is a no-op in an already-running
-      // local-mode JVM
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // heap must come from the LAUNCHER (e.g. SBT_OPTS=-Xmx16g):
+    // spark.driver.memory is a no-op in an already-running local-mode JVM
+    val spark = graft.core.Sessions.local()
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val maxDf = graft.ops.LlmQueries.SimhashMaxDf
     val jMaxDf = graft.ops.LlmQueries.JaccardMaxDf

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** One-time sf1 honesty fixture (VERDICT r10 #7): replicate the sf0.1
@@ -38,14 +37,7 @@ object SfScale {
     val (src, dst, copies) = (args(0), args(1), args(2).toInt)
     require(copies <= Rot.length * Rot2.length,
       s"SfScale: copies must be <= ${Rot.length * Rot2.length} to stay decorrelated")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.Sessions.local()
 
     val docs = spark.read.parquet(s"$src/documents.parquet")
     (0 until copies).map { k =>

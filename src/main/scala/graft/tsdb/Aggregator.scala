@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** carbon-aggregator — the stage the reference explicitly stubs
   * ("there's no aggregation stage (yet)" / "carbon-aggregator code
-  * would go here", /root/reference/L_DataCache.lua:121,170) while
+  * would go here", L_DataCache.lua:121,170) while
   * already shipping its conf surface (aggregation-rules.conf.example
   * and the [pre]/[post] rewrite passes that bracket it). Semantics per
   * graphite's published config-carbon documentation: each rule

@@ -3,7 +3,7 @@ package graft.tsdb
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The graphite_cgi request surface as a library facade
-  * (/root/reference/graphite_cgi.lua:398-407 dispatch table): a user of
+  * (graphite_cgi.lua:398-407 dispatch table): a user of
   * the reference's HTTP API calls these with the same parameters the
   * URL would carry.
   */

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** Carbon ingest pipeline: plaintext parsing, rewrite rules, and
   * storage-schema / storage-aggregation rule matching
-  * (/root/reference/L_DataCache.lua).
+  * (L_DataCache.lua).
   */
 object Carbon {
 

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions.col
 
 /** The reference's WSAPI entry point as a pure library dispatcher:
   * request URL in, DataFrame out
-  * (/root/reference/graphite_cgi.lua:401-407 dispatch table,
+  * (graphite_cgi.lua:401-407 dispatch table,
   * :429-441 parameter parsing, :478-510 run()).
   *
   * This is everything the reference's HTTP layer does short of the

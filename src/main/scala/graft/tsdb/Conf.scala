@@ -6,11 +6,11 @@ import org.apache.spark.sql.functions._
 /** Graphite-format `.conf` parsers — the reference reads its rule sets
   * from files, not code: `storage-schemas.conf` /
   * `storage-aggregation.conf` via `DataDaemon.read_conf_file`
-  * (/root/reference/L_DataDaemon.lua:106-150, consumed at
-  * /root/reference/L_DataCache.lua:147-159), `rewrite-rules.conf`
-  * `[pre]`/`[post]` sections (/root/reference/L_DataCache.lua:94-129),
+  * (L_DataDaemon.lua:106-150, consumed at
+  * L_DataCache.lua:147-159), `rewrite-rules.conf`
+  * `[pre]`/`[post]` sections (L_DataCache.lua:94-129),
   * and the watcher's `DataTranslation.conf`
-  * (/root/reference/L_DataWatcher.lua:54,313-316).
+  * (L_DataWatcher.lua:54,313-316).
   *
   * Pure text → rule-type functions feeding the existing
   * [[Carbon.Rule]]/[[Carbon.SchemaRule]]/translation machinery; the

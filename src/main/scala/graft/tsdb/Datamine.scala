@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 
 /** dataMine bridge: uniform-grid resampling with last-sample-≤-t
   * semantics, per-channel filters, and weekly partitioning
-  * (/root/reference/L_DataMineServer.lua:138-183,
-  * /root/reference/L_DataBaseDM.lua:156-232).
+  * (L_DataMineServer.lua:138-183,
+  * L_DataBaseDM.lua:156-232).
   */
 object Datamine {
 

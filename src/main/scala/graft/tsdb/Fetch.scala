@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * highest-precision archive that still covers `from`, quantize the
   * bounds to its grid, and return a **dense** series — one row per grid
   * interval per path, value null where no point exists
-  * (/root/reference/L_DataWhisper.lua:356-411,525-552).
+  * (L_DataWhisper.lua:356-411,525-552).
   *
   * The dense grid is sequence+explode over the matched paths (no driver
   * loop); the archive join is an equi-join on (path, bucket). At scale

@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 
 /** Finder federation — the reference's Store unions several finders
   * (Whisper files AND dataMine channel trees) into one /metrics/find
-  * namespace (/root/reference/L_DataGraphiteAPI.lua:340-397,
-  * /root/reference/L_DataFinders.lua:219-247): branch nodes dedup
+  * namespace (L_DataGraphiteAPI.lua:340-397,
+  * L_DataFinders.lua:219-247): branch nodes dedup
   * across finders, and when several finders claim the same LEAF path
   * only the first finder's node survives
   * (L_DataGraphiteAPI.lua:382-384 "only return the FIRST leaf node").

@@ -3,9 +3,9 @@ package graft.tsdb
 /** Graphite metric-path glob handling: `*`, `?`, `{a,b}` value lists.
   *
   * The reference expands `{...}` lists with a coroutine
-  * (/root/reference/L_DataGraphiteAPI.lua:92-105) and converts each
+  * (L_DataGraphiteAPI.lua:92-105) and converts each
   * path component to a Lua pattern per tree level
-  * (/root/reference/L_DataFinders.lua:182-214). We compile the whole
+  * (L_DataFinders.lua:182-214). We compile the whole
   * query to a single anchored regex (portable Java/RE2 subset) so it
   * can be pushed into a parquet-scan `rlike` filter instead of a
   * per-level tree walk.

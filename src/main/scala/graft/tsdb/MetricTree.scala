@@ -4,8 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Graphite metrics API over the flat path namespace: find / expand /
-  * index (/root/reference/graphite_cgi.lua:244-301, tree walk in
-  * /root/reference/L_DataFinders.lua:152-217).
+  * index (graphite_cgi.lua:244-301, tree walk in
+  * L_DataFinders.lua:152-217).
   *
   * The reference walks an in-memory directory tree per level; here the
   * "tree" is the distinct-path set and a query compiles to one anchored

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Caching._
 
-import graft.core.Tables
+import graft.core.{Fixtures, Tables}
 
 /** Driver-verifiable query entry points for the tsdb operator family
   * (SURVEY.md §2 groups A-D). Each def backs one `SparkEntry.queries`
@@ -204,16 +204,9 @@ object Queries {
     */
   def fetchStored(spark: SparkSession, dir: String): DataFrame = {
     val spec = Retention.parse("10m:1d,1h:7d,1d:60d")
-    val root = java.nio.file.Paths.get(
-      "target", "graft_store", dir.replaceAll("[^A-Za-z0-9.]", "_"))
-      .toAbsolutePath.toString
-    // write-once / fetch-many, like production: the marker is written only
-    // after a complete materialization, so a crashed write is redone
-    val marker = java.nio.file.Paths.get(root, "_GRAFT_STORE_OK")
-    if (!java.nio.file.Files.exists(marker)) {
-      MetricStore.writeArchives(Tables.metrics(spark, dir), spec, "average", 0.0, root)
-      java.nio.file.Files.writeString(marker, spec.map(_.toString).mkString(","))
-    }
+    // write-once / fetch-many, like production
+    val root = Fixtures.once("store", dir)(r =>
+      MetricStore.writeArchives(Tables.metrics(spark, dir), spec, "average", 0.0, r))
     MetricStore.fetchStored(spark, root, spec, "vera.u1?.click", fetchFrom, Now, Now)
       .select(col("path"), col("t"), round(col("value") - Eps, 4).as("value"))
       .orderBy(col("path"), col("t"))
@@ -1026,20 +1019,13 @@ object Queries {
     * READ, the production serving metric): built on the click subset,
     * merged with the whole namespace.
     */
-  private def tagIndexRootOnce(spark: SparkSession, dir: String): String = {
-    val root = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_tagindex_${ProcessHandle.current().pid()}",
-      dir.stripPrefix("/").replaceAll("[^A-Za-z0-9.]", "_")).toString
-    val marker = java.nio.file.Paths.get(root, "_GRAFT_TAGIDX_OK")
-    if (!java.nio.file.Files.exists(marker)) {
+  private def tagIndexRootOnce(spark: SparkSession, dir: String): String =
+    Fixtures.once("tagindex", dir) { root =>
       val paths = Tables.metricsTagged(spark, dir).select(col("path"))
       Tags.writeTagIndex(paths.filter(col("path").startsWith("click")),
         s"$root/idx")
       Tags.mergeTagIndex(spark, s"$root/idx", paths)
-      java.nio.file.Files.writeString(marker, "ok")
-    }
-    s"$root/idx"
-  }
+    } + "/idx"
 
   def tagsIndexMerge(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(tagIndexRootOnce(spark, dir))
@@ -1216,18 +1202,13 @@ object Queries {
     * Write-once per process like the store/fixture queries.
     */
   def storeCompactFetch(spark: SparkSession, dir: String): DataFrame = {
-    val root = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_compact_${ProcessHandle.current().pid()}",
-      dir.stripPrefix("/").replaceAll("[^A-Za-z0-9.]", "_")).toString
-    val marker = java.nio.file.Paths.get(root, "_GRAFT_COMPACT_OK")
-    if (!java.nio.file.Files.exists(marker)) {
+    val root = Fixtures.once("compact", dir) { root =>
       val m = Tables.metrics(spark, dir)
         .withColumn("day", col("ts") - col("ts") % MetricStore.DaySeconds)
       for (k <- 0 until 4)
         m.filter(col("ts") % 4 === k).repartition(8)
           .write.partitionBy("day").mode("append").parquet(s"$root/raw")
       MetricStore.compactRaw(spark, s"$root/raw", s"$root/compact")
-      java.nio.file.Files.writeString(marker, "ok")
     }
     spark.read.parquet(s"$root/compact")
       .select(col("path"), col("ts"), round(col("value"), 4).as("value"))
@@ -1258,12 +1239,8 @@ object Queries {
     * [[storeMaintainedFetch]] (the lossless read) and
     * [[storeReportQuery]] (the observability rows over the same store).
     */
-  private def maintainedRoot(spark: SparkSession, dir: String): String = {
-    val root = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_maintained_${ProcessHandle.current().pid()}",
-      dir.stripPrefix("/").replaceAll("[^A-Za-z0-9.]", "_")).toString
-    val marker = java.nio.file.Paths.get(root, "_GRAFT_MAINTAIN_OK")
-    if (!java.nio.file.Files.exists(marker)) {
+  private def maintainedRoot(spark: SparkSession, dir: String): String =
+    Fixtures.once("maintained", dir) { root =>
       val m = Tables.metrics(spark, dir)
         .select(col("path"), col("ts"), col("value"))
       // DAY-ORDERED arrival except the held-back stragglers: each
@@ -1287,10 +1264,7 @@ object Queries {
       require(!graft.streaming.CarbonStream.maintainTickOnce(
         batches(1), s"$root/hot", s"$root/cold", 1L),
         "maintainTickOnce: replayed committed batch was not skipped")
-      java.nio.file.Files.writeString(marker, "ok")
     }
-    root
-  }
 
   def storeMaintainedFetch(spark: SparkSession, dir: String): DataFrame = {
     val root = maintainedRoot(spark, dir)
@@ -1399,17 +1373,13 @@ object Queries {
     * granularity, drops nothing newer, keeps nothing older.
     */
   def storeRetentionFetch(spark: SparkSession, dir: String): DataFrame = {
-    val root = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_retention_${ProcessHandle.current().pid()}",
-      dir.stripPrefix("/").replaceAll("[^A-Za-z0-9.]", "_")).toString
-    val marker = java.nio.file.Paths.get(root, "_GRAFT_RETAIN_OK")
     val m = Tables.metrics(spark, dir)
       .select(col("path"), col("ts"), col("value"))
     val dayCol = col("ts") - col("ts") % MetricStore.DaySeconds
     val days = m.select(dayCol.as("day")).distinct().orderBy(col("day"))
       .collect().map(_.getLong(0))
     val cutoff = days(days.length / 3)
-    if (!java.nio.file.Files.exists(marker)) {
+    val root = Fixtures.once("retention", dir) { root =>
       val cuts = Seq(days(days.length / 3), days(2 * days.length / 3))
       val batches = Seq(
         m.filter(dayCol < cuts(0)),
@@ -1420,7 +1390,6 @@ object Queries {
           b, s"$root/hot", s"$root/cold", i.toLong): Unit
       }
       MetricStore.retentionVacuum(spark, s"$root/hot", s"$root/cold", cutoff)
-      java.nio.file.Files.writeString(marker, "ok")
     }
     MetricStore.readMaintained(spark, s"$root/hot", s"$root/cold")
       .select(col("path"), col("ts"), round(col("value"), 4).as("value"))
@@ -1456,14 +1425,8 @@ object Queries {
         |aggregationMethod = average
         |xFilesFactor = 0
         |""".stripMargin)
-    val root = java.nio.file.Paths.get(
-      "target", "graft_store_conf", dir.replaceAll("[^A-Za-z0-9.]", "_"))
-      .toAbsolutePath.toString
-    val marker = java.nio.file.Paths.get(root, "_GRAFT_STORE_OK")
-    if (!java.nio.file.Files.exists(marker)) {
-      MetricStore.writeArchivesConf(Tables.metrics(spark, dir), schemas, aggs, root)
-      java.nio.file.Files.writeString(marker, "ok")
-    }
+    val root = Fixtures.once("store_conf", dir)(r =>
+      MetricStore.writeArchivesConf(Tables.metrics(spark, dir), schemas, aggs, r))
     MetricStore.fetchStoredConf(spark, root, "vera.u1?.*", fetchFrom, Now, Now)
       .select(col("path"), col("t"), round(col("value") - Eps, 4).as("value"))
       .orderBy(col("path"), col("t"))
@@ -1574,8 +1537,7 @@ object Queries {
     * batch-2 incoming beats batch-1 stored exactly as src 1 beats 0).
     */
   def streamUpsert(spark: SparkSession, dir: String): DataFrame = {
-    val store = java.nio.file.Files
-      .createTempDirectory("graft_stream_upsert").toString
+    val store = Fixtures.fresh("stream_upsert")
     val m = Tables.metrics(spark, dir).select(col("path"), col("ts"), col("value"))
     graft.streaming.CarbonStream.mergeBatch(m, store)
     graft.streaming.CarbonStream.mergeBatch(
@@ -1593,8 +1555,7 @@ object Queries {
     * verbatim, and the byte-level no-op is pinned in StreamSpec.
     */
   def streamUpsertReplay(spark: SparkSession, dir: String): DataFrame = {
-    val store = java.nio.file.Files
-      .createTempDirectory("graft_stream_upsert_replay").toString
+    val store = Fixtures.fresh("stream_upsert_replay")
     val m = Tables.metrics(spark, dir).select(col("path"), col("ts"), col("value"))
     val late = m.filter(col("ts") % 3 === 0).withColumn("value", col("value") * 2)
     graft.streaming.CarbonStream.mergeBatchOnce(m, store, 0L)
@@ -1738,17 +1699,11 @@ object Queries {
     * into 5 slots) and a multi-archive file; the oracle pins the
     * surviving points as literals.
     */
-  // built once per JVM (lazy): the fixture is deterministic, and
+  // built once per JVM: the fixture is deterministic, and
   // rebuilding it per call made whisper_read/whisper_fetch bench
   // samples measure fixture IO instead of the read path (VERDICT r3)
-  private lazy val whisperFixtureDir: String = {
+  private def whisperFixtureDir: String = Fixtures.once("wsp_fixture", "") { root =>
     import graft.sources.Whisper
-    // per-process dir: concurrent Verify/Bench runs must not race on
-    // the ring-slot overwrites (the fixture itself is deterministic)
-    val root = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_wsp_fixture_${ProcessHandle.current().pid()}").toString
-    val d = new java.io.File(root)
-    if (d.exists()) d.listFiles().foreach(_.delete()) else d.mkdirs()
     val base = 1706097600L
     Whisper.create(s"$root/vera.u1a.click.wsp", Seq((600L, 5)), 0.5, "average")
     (0 until 7).foreach(k => // ring wrap: only k=2..6 survive
@@ -1758,7 +1713,6 @@ object Queries {
       Whisper.update(s"$root/vera.u1b.temp.wsp", base + 600L * k, 10.5 + k))
     Whisper.update(s"$root/vera.u1b.temp.wsp", base, 99.25, archive = 1)
     Whisper.update(s"$root/vera.u1b.temp.wsp", base + 3600L, 98.5, archive = 1)
-    root
   }
 
   def whisperRead(spark: SparkSession, dir: String): DataFrame =
@@ -1787,15 +1741,7 @@ object Queries {
   def whisperExportFetch(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.Whisper
     val spec = Retention.parse("10m:1d,1h:7d,1d:60d")
-    // stripPrefix BEFORE sanitizing: "/root/..." would otherwise become
-    // "_root_..." and Spark's file listing treats leading-underscore
-    // paths as hidden — the source of the one-time benign-looking
-    // `WARN DataSource: All paths were ignored` in earlier rounds
-    val root = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_wsp_export_${ProcessHandle.current().pid()}",
-      dir.stripPrefix("/").replaceAll("[^A-Za-z0-9.]", "_")).toString
-    val marker = java.nio.file.Paths.get(root, "_GRAFT_EXPORT_OK")
-    if (!java.nio.file.Files.exists(marker)) {
+    val root = Fixtures.once("wsp_export", dir) { root =>
       val exported = Whisper.export(spark,
         Tables.metrics(spark, dir).filter(MetricStore.pathPredicate("vera.u1?.click")),
         root, spec, "average", 0.0, Now)
@@ -1803,7 +1749,6 @@ object Queries {
       // loudly here, never be marker-cached and silently fetched as an
       // empty fixture forever after
       require(exported > 0, s"whisper export produced no .wsp files under $root")
-      java.nio.file.Files.writeString(marker, spec.mkString(","))
     }
     Whisper.fetchFiles(spark, root, "vera.u1?.click", fetchFrom, Now, Now)
       .select(col("path"), col("t"), round(col("value") - Eps, 4).as("value"))

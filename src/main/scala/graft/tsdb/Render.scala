@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.core.Caching._
 
 /** Graphite render output formats over a fetched dense series
-  * (/root/reference/graphite_cgi.lua:318-371).
+  * (graphite_cgi.lua:318-371).
   */
 object Render {
 

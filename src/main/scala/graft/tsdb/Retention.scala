@@ -3,7 +3,7 @@ package graft.tsdb
 /** Whisper archive (retention) specifications.
   *
   * Re-expresses the reference's archiveSpec parser + validator
-  * (/root/reference/L_DataWhisper.lua:227-319): a spec like
+  * (L_DataWhisper.lua:227-319): a spec like
   * `"1m:1d,1h:7d"` is a list of (secondsPerPoint, points) archives,
   * sorted by precision, where each coarser archive's resolution must be
   * a multiple of the finer one's, retention must strictly grow, and the

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** Whisper rollup/propagation re-expressed as declarative aggregation.
   *
-  * A Whisper archive (/root/reference/L_DataWhisper.lua:327-427) is a
+  * A Whisper archive (L_DataWhisper.lua:327-427) is a
   * fixed grid of (interval, value) points at `secondsPerPoint`
   * resolution; writes to a finer archive propagate to each coarser one
   * by aggregating the finer archive's slots inside the coarser bucket,

@@ -8,8 +8,8 @@ import org.apache.spark.sql.functions._
   * `aliasByTags`.
   *
   * Beyond-reference depth: the reference's namespace is dot-hierarchies
-  * only (/root/reference/L_DataFinders.lua:152-217 walks a directory
-  * tree per level; /root/reference/graphite_cgi.lua:244-262 serves only
+  * only (L_DataFinders.lua:152-217 walks a directory
+  * tree per level; graphite_cgi.lua:244-262 serves only
   * glob finds), but tagged queries are the one graphite-web 1.1 surface
   * a modern Grafana user hits that a dot-only engine cannot answer —
   * the same judgement that added the C9 function layer.

@@ -4,7 +4,7 @@ import java.time.{LocalDate, LocalDateTime, ZoneOffset}
 
 /** Graphite render-URL time parsing.
   *
-  * Faithful to the reference (/root/reference/graphite_cgi.lua:54-94):
+  * Faithful to the reference (graphite_cgi.lua:54-94):
   * relative times `-2d`/`-30min` scale by 0.998 ("so that a week-long
   * archive fits into now - week"), and partial ISO-8601 date-times fill
   * missing fields with defaults (month=1, day=1, **hour=12**, min=0,

@@ -3,7 +3,7 @@ package graft.tools
 import graft.SparkSpec
 import graft.core.Caching._
 
-/** The ExplainAudit invariants pinned as tests, so a plan regression
+/** The `Plans` audit invariants pinned as tests, so a plan regression
   * (lost pushdown, a dimension falling out of broadcast, an extra
   * shuffle, an unbounded cartesian) fails `sbt test` instead of waiting
   * for a manual audit. Asserts over `queryExecution.executedPlan` of
@@ -609,6 +609,16 @@ class PlanAuditSpec extends SparkSpec {
     val scans = textScans(plan)
     spark.catalog.clearCache()
     assert(scans >= 1 && scans <= 2, s"$scans corpus text scans:\n${plan.toString.take(4000)}")
+  }
+
+  test("Profile: per-query totals are the sums of the recorded stage rows") {
+    val r = Profile.profile(spark, "q1_agg", dir)
+    assert(r.jobs >= 1, r)
+    assert(r.stages.nonEmpty && r.tasks >= r.stages.size, r)
+    assert(r.taskMs == r.stages.map(_.runMs).sum, r)
+    assert(r.shuffleWriteBytes == r.stages.map(_.shuffleWriteBytes).sum, r)
+    assert(r.planS > 0 && r.run1S > 0 && r.run2S > 0, r)
+    assert(r.operators.nonEmpty, r)
   }
 
   test("no unbounded cartesian product in any driver query") {

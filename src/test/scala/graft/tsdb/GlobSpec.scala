@@ -3,8 +3,8 @@ package graft.tsdb
 import org.scalatest.funsuite.AnyFunSuite
 
 /** C4 series_expand + glob→regex compilation
-  * (/root/reference/L_DataGraphiteAPI.lua:92-105,
-  * /root/reference/L_DataFinders.lua:182-214).
+  * (L_DataGraphiteAPI.lua:92-105,
+  * L_DataFinders.lua:182-214).
   */
 class GlobSpec extends AnyFunSuite {
 

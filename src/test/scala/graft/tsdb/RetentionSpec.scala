@@ -3,7 +3,7 @@ package graft.tsdb
 import org.scalatest.funsuite.AnyFunSuite
 
 /** B10 retention_spec — parser/validator semantics from
-  * /root/reference/L_DataWhisper.lua:227-319.
+  * L_DataWhisper.lua:227-319.
   */
 class RetentionSpec extends AnyFunSuite {
   import Retention._

@@ -3,7 +3,7 @@ package graft.tsdb
 import org.scalatest.funsuite.AnyFunSuite
 
 /** C7 time_parse — graphite render-URL times
-  * (/root/reference/graphite_cgi.lua:54-94).
+  * (graphite_cgi.lua:54-94).
   */
 class TimeParseSpec extends AnyFunSuite {
   val now = 1706659200L
