@@ -105,12 +105,12 @@ object CarbonStream {
     * remaining window — tick done, marker lost — replays into a tick
     * that is ITSELF idempotent: the hot append lands under the batch's
     * own `ingest_batch=<id>` partition with dynamic overwrite (a
-    * replayed write replaces its own files), days the lost tick
-    * already published route through the late store whose
-    * last-write-wins merge converges to identical values, and
-    * compactTick/cleanupHot skip days already done. Observable state
-    * is exactly-once in every interleaving. Returns whether the tick
-    * ran.
+    * replayed write replaces its own files), points for days the lost
+    * tick already published fold into cold through the last-write-wins
+    * [[graft.tsdb.MetricStore.mergeDays]], which converges to identical
+    * values, and compactTick/cleanupHot skip days already done.
+    * Observable state is exactly-once in every interleaving. Returns
+    * whether the tick ran.
     */
   private[graft] def maintainTickOnce(batch: DataFrame, hotDir: String,
                                       coldDir: String, batchId: Long,
@@ -128,29 +128,23 @@ object CarbonStream {
     }
   }
 
-  /** The late store: late points (days the cold store already
-    * published) merge here through the G6 upsert path instead of
-    * poisoning the stream. Underscore dir — invisible to the hot
-    * store's own parquet discovery; [[graft.tsdb.MetricStore
-    * .readMaintained]] overlays it last-write-wins per (path, ts).
-    */
-  private[graft] def lateStoreDir(hotDir: String): String = s"$hotDir/_late"
-
   /** One maintenance micro-batch, shared verbatim by the
     * `store_maintained_fetch` batch twin: split the batch on the cold
     * store's published-day set (K-row metadata — the batch's distinct
-    * days vs the cold listing, never a data scan), merge LATE points
-    * (published days are immutable — that is what makes the rename
-    * swap and the deferred hot delete safe without a lock) into the
-    * [[lateStoreDir]] via the G6 last-write-wins upsert, append the
-    * on-time points to hot under this batch's own `ingest_batch`
-    * partition (dynamic overwrite — a replayed write is file-level
-    * idempotent), reclaim hot copies of days EARLIER ticks published
-    * (any reader concurrent with those ticks has long resolved its
-    * plan), then compact every day strictly before the store's max
-    * day. The live-day watermark is the store-wide max (monotone — a
-    * late batch carrying only old points can never reopen a published
-    * day). NOTE: the maintained sink owns `hotDir` from birth — the
+    * days vs the cold listing, never a data scan), fold LATE points
+    * (days the cold store already published) straight into cold through
+    * [[graft.tsdb.MetricStore.mergeDays]] — last-write-wins per slot,
+    * staged then swapped in by rename, so readers see each published
+    * day old or new, never half-merged — append the on-time points to
+    * hot under this batch's own `ingest_batch` partition (dynamic
+    * overwrite — a replayed write is file-level idempotent), reclaim
+    * hot copies of days EARLIER ticks published (any reader concurrent
+    * with those ticks has long resolved its plan), then compact every
+    * day strictly before the store's max day. `mergeDays` runs on every
+    * tick, late points or not, so its recovery pass finishes any publish
+    * an earlier tick died in before this tick compacts or ages days. The
+    * live-day watermark is the store-wide max (monotone — a late batch
+    * carrying only old points can never reopen a published day). NOTE: the maintained sink owns `hotDir` from birth — the
     * (day, ingest_batch) layout must not mix with a plain
     * day-partitioned append store.
     */
@@ -173,44 +167,36 @@ object CarbonStream {
       else withDay.filter(col("day") >= horizon)
     val b = inRange.select(col("path"), col("ts"), col("value"), col("day"))
       .cache()
-    if (!b.isEmpty) {
-      val published = graft.tsdb.MetricStore.coldDays(spark, coldDir).toSet
-      val days = b.select(col("day").cast("long")).distinct()
-        .collect().map(_.getLong(0))
-      val lateDays = days.filter(published.contains).sorted.toSeq
-      if (lateDays.nonEmpty)
-        mergeBatch(b.filter(col("day").isin(lateDays.map(d => d: Any): _*))
-          .select(col("path"), col("ts"), col("value")), lateStoreDir(hotDir))
-      if (days.exists(!published.contains(_))) {
-        val onTime =
-          if (lateDays.isEmpty) b
-          else b.filter(!col("day").isin(lateDays.map(d => d: Any): _*))
-        onTime.withColumn("ingest_batch", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("day", "ingest_batch").parquet(hotDir)
-        graft.tsdb.MetricStore.cleanupHot(spark, hotDir, coldDir)
-        // the live-day watermark is a directory-name fact (the
-        // MetricStore.dayDirs listing) — never a data scan of the hot
-        // tail, which at 100 TB is the live day of the whole fleet
-        // re-read per micro-batch
-        val liveDay = graft.tsdb.MetricStore.dayDirs(spark, hotDir).max
-        graft.tsdb.MetricStore.compactTick(spark, hotDir, coldDir, liveDay)
-        // whisper's maxRetention, live: with a horizon configured the
-        // tick ages out days the store has moved past — the full ring
-        // behavior (append at the head, compact the middle, drop the
-        // tail) in ONE maintenance loop. Idempotent (a replayed tick
-        // re-deletes nothing), monotone in liveDay.
-        if (retentionDays > 0)
-          graft.tsdb.MetricStore.retentionVacuum(spark, hotDir, coldDir,
-            liveDay - retentionDays.toLong *
-              graft.tsdb.MetricStore.DaySeconds): Unit
-      }
-      // drain the late store into cold (LWW per slot, staged swap):
-      // after this, `_late` holds only days whose merge hasn't run —
-      // the read path's broadcast overlay is bounded by construction,
-      // and at steady state it short-circuits away entirely
-      graft.tsdb.MetricStore.lateFoldTick(spark, hotDir, coldDir): Unit
+    val days = b.select(col("day").cast("long")).distinct()
+      .collect().map(_.getLong(0))
+    val published = graft.tsdb.MetricStore.coldDays(spark, coldDir).toSet
+    val lateDays = days.filter(published.contains).sorted.toSeq
+    graft.tsdb.MetricStore.mergeDays(spark, coldDir,
+      b.filter(col("day").isin(lateDays.map(d => d: Any): _*)), lateDays)
+    if (days.exists(!published.contains(_))) {
+      val onTime =
+        if (lateDays.isEmpty) b
+        else b.filter(!col("day").isin(lateDays.map(d => d: Any): _*))
+      onTime.withColumn("ingest_batch", lit(batchId))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("day", "ingest_batch").parquet(hotDir)
+      graft.tsdb.MetricStore.cleanupHot(spark, hotDir, coldDir)
+      // the live-day watermark is a directory-name fact (the
+      // MetricStore.dayDirs listing) — never a data scan of the hot
+      // tail, which at 100 TB is the live day of the whole fleet
+      // re-read per micro-batch
+      val liveDay = graft.tsdb.MetricStore.dayDirs(spark, hotDir).max
+      graft.tsdb.MetricStore.compactTick(spark, hotDir, coldDir, liveDay)
+      // whisper's maxRetention, live: with a horizon configured the
+      // tick ages out days the store has moved past — the full ring
+      // behavior (append at the head, compact the middle, drop the
+      // tail) in ONE maintenance loop. Idempotent (a replayed tick
+      // re-deletes nothing), monotone in liveDay.
+      if (retentionDays > 0)
+        graft.tsdb.MetricStore.retentionVacuum(spark, hotDir, coldDir,
+          liveDay - retentionDays.toLong *
+            graft.tsdb.MetricStore.DaySeconds): Unit
     }
     b.unpersist()
   }
@@ -243,10 +229,9 @@ object CarbonStream {
     * Structured Streaming replays a micro-batch id after a failure —
     * foreachBatch is at-least-once — and without the marker the replay
     * would re-run the whole merge: value-idempotent (last-write-wins),
-    * but a full dynamic-partition REWRITE of every touched day, i.e.
-    * new files for nothing. With it the replay is a no-op at the FILE
-    * level: the store's bytes are exactly those of the single
-    * successful run. The one remaining window — a crash after the
+    * but a full REWRITE of every touched day, i.e. new files for
+    * nothing. With it the replay is a no-op at the FILE level: the
+    * store's bytes are exactly those of the single successful run. The one remaining window — a crash after the
     * merge, before the marker — replays into a merge whose
     * last-write-wins fold converges to the identical values (the G6
     * law), after which the marker lands; so observable state is
@@ -268,43 +253,20 @@ object CarbonStream {
   }
 
   /** One micro-batch's merge, shared verbatim by the `stream_upsert`
-    * batch twin: read ONLY the day partitions the batch touches
-    * (partition pruning over the batch's distinct days — a bounded
-    * driver-side list, one entry per calendar day in one micro-batch),
-    * merge with Rollup.upsert's single last-write-wins groupBy, and
-    * rewrite ONLY those days (dynamic partition overwrite). The
-    * localCheckpoint materializes the merged days before the commit —
-    * the write replaces the very files the plan read.
+    * batch twin: the batch's distinct days (a small collected list,
+    * one entry per calendar day in one micro-batch) and the batch go to
+    * [[graft.tsdb.MetricStore.mergeDays]], which reads ONLY those days,
+    * merges last-write-wins, stages one sorted file per day and swaps
+    * each in by rename — never an overwrite of the files the merge
+    * reads. The batch is cached: the day probe and the merge both read
+    * it.
     */
   private[graft] def mergeBatch(batch: DataFrame, dir: String): Unit = {
-    val spark = batch.sparkSession
-    import spark.implicits._
-    val day = col("ts") - col("ts") % graft.tsdb.MetricStore.DaySeconds
-    // two references: the distinct-day probe and the merge input
-    val b = batch.select(col("path"), col("ts"), col("value"), day.as("day")).cache()
-    val days = b.select(col("day")).distinct().as[Long].collect()
-    if (days.nonEmpty) {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      // an existing-but-EMPTY dir (fresh temp store) has no schema to
-      // infer; underscore entries (the _txn markers) are invisible to
-      // parquet discovery and must not count as data
-      val existing =
-        if (fs.exists(p) && fs.listStatus(p).exists(s =>
-            !s.getPath.getName.startsWith("_") &&
-              !s.getPath.getName.startsWith(".")))
-          spark.read.parquet(dir)
-            .filter(col("day").isin(days.map(d => d: Any): _*))
-            .select(col("path"), col("ts"), col("value"))
-        else spark.emptyDataset[Point].toDF()
-      val merged = graft.tsdb.Rollup
-        .upsert(existing, b.select(col("path"), col("ts"), col("value")))
-        .withColumn("day", day)
-        .localCheckpoint()
-      merged.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("day").parquet(dir)
-    }
+    import batch.sparkSession.implicits._
+    val b = batch.select(col("path"), col("ts"), col("value")).cache()
+    val days = b.select((col("ts") - col("ts") % graft.tsdb.MetricStore.DaySeconds)
+      .as("day")).distinct().as[Long].collect().toSeq
+    graft.tsdb.MetricStore.mergeDays(batch.sparkSession, dir, b, days)
     b.unpersist()
   }
 

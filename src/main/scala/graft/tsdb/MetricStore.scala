@@ -162,8 +162,8 @@ object MetricStore {
   /** The day set of ANY day-partitioned store — K-row metadata read off
     * the directory names (one listing, never a data scan). This is the
     * watermark/pointer primitive everywhere: the cold published set,
-    * the hot live-day watermark, and the late store's unfolded days all
-    * derive from names, so no maintenance decision ever pays a data
+    * the hot live-day watermark, and a merge's touched and staged days
+    * all derive from names, so no maintenance decision ever pays a data
     * scan of the store it maintains.
     */
   def dayDirs(spark: SparkSession, dir: String): Seq[Long] = {
@@ -246,9 +246,9 @@ object MetricStore {
     * buffer OVERWRITES slots older than the archive's horizon, so old
     * points simply cease to exist; a day-partitioned store instead
     * grows forever unless someone drops the old days). Applies the
-    * horizon at DAY granularity: every cold, hot, and late-store day
-    * dir strictly before `beforeDay` deletes — name-level metadata
-    * ops off the directory listings, never a data scan, exactly the
+    * horizon at DAY granularity: every cold and hot day dir strictly
+    * before `beforeDay` deletes — name-level metadata ops off the
+    * directory listings, never a data scan, exactly the
     * [[graft.similarity.AnnIndex.vacuum]] shape for the metric side.
     * Readers concurrent with the vacuum follow the same retention
     * contract as every such system: pin + finish within the horizon.
@@ -268,8 +268,7 @@ object MetricStore {
           q.getName.stripPrefix("day=").toLong < beforeDay)
         .map { q => fs.delete(q, true); q.getName.stripPrefix("day=").toLong }
     }
-    (dropOld(coldDir) ++ dropOld(hotDir) ++ dropOld(s"$hotDir/_late"))
-      .distinct.sorted
+    (dropOld(coldDir) ++ dropOld(hotDir)).distinct.sorted
   }
 
   /** The PERSISTED retention horizon — `_horizon_<day>` markers under
@@ -306,73 +305,75 @@ object MetricStore {
     }
   }
 
-  /** Drain the LATE store into cold — the tick that turns
-    * [[readMaintained]]'s by-contract K-row late bound into a
-    * by-construction one (VERDICT r11 #1): for each published day
-    * holding late rows, merge cold + late last-write-wins per
-    * (path, ts) (the G6 fold — the late row is the newest write for
-    * its slot), stage the merged day under `_foldstage` (underscore:
-    * invisible to readers), swap it in (move the old cold day out,
-    * one rename in), and drop the late copies. After the fold the late
-    * store holds ONLY days whose merge hasn't run yet — under a fleet
-    * with a permanently clock-skewed source, reads stay one bounded
-    * tick behind instead of paying an ever-growing broadcast.
+  /** The one last-write-wins store merge — Whisper's unconditional
+    * slot overwrite (L_DataWhisper.lua:331-354) on a day-partitioned
+    * parquet store, shared by the G6 upsert sink
+    * ([[graft.streaming.CarbonStream.mergeBatch]]) and the maintained
+    * sink's late points ([[graft.streaming.CarbonStream.maintainTick]]
+    * folds them straight into cold). `points` carries only `days`; of
+    * those, the days the store already holds (known from its day-dir
+    * names) are read as explicit day dirs, merged with `points` through
+    * Rollup.upsert (the incoming write wins its slot), written as one
+    * sorted file per day into `_foldstage` (underscore: invisible to
+    * readers), and each day then PUBLISHES by one rename — an existing
+    * day's old copy is deleted first. The read and the write never
+    * share files, so no lineage truncation is needed: a lost executor
+    * recomputes from the old copies, still intact until the publish.
     *
-    * Crash-safe at every point: the staged day is the write-ahead copy
-    * of the merge, so a fold that dies between the move-out and the
-    * publish leaves `_foldstage/day=d` complete and `day=d` absent —
-    * the NEXT tick's recovery pass finishes the rename (and until it
-    * runs, readers miss only that one day, the same pin-and-finish
-    * window every retention system documents); a fold that dies with
-    * both copies present re-merges (LWW converges); a fold that dies
-    * after the publish but before the late delete re-merges already-
-    * merged rows (idempotent). Returns the days folded.
+    * Crash-safe at every point: the recovery pass at the start of each
+    * call finishes a publish a prior call died in — a staged day whose
+    * live copy is absent renames in, a staged day whose live copy still
+    * exists is stale and drops. Until it runs, readers miss at most that
+    * one day (the pin-and-finish window every retention system
+    * documents). A crash before the publish leaves the store as it was,
+    * except that a day the store did not hold yet may publish from a
+    * half-written stage; either way the caller's `_txn` marker was never
+    * written, so the replayed batch re-merges and last-write-wins
+    * converges to the same values.
     */
-  def lateFoldTick(spark: SparkSession, hotDir: String,
-                   coldDir: String): Seq[Long] = {
-    val lateDir = s"$hotDir/_late"
-    val stage = s"$coldDir/_foldstage"
-    val (fs, _) = hadoopFs(spark, coldDir)
-    // recovery pass: finish any publish a prior fold died before
+  def mergeDays(spark: SparkSession, dir: String, points: DataFrame,
+                days: Seq[Long]): Unit = {
+    val stage = s"$dir/_foldstage"
+    val (fs, _) = hadoopFs(spark, dir)
+    def path(s: String) = new org.apache.hadoop.fs.Path(s)
     dayDirs(spark, stage).foreach { d =>
-      val stageP = new org.apache.hadoop.fs.Path(s"$stage/day=$d")
-      val coldP = new org.apache.hadoop.fs.Path(s"$coldDir/day=$d")
-      if (!fs.exists(coldP)) {
-        require(fs.rename(stageP, coldP), s"lateFoldTick: recovery of day=$d failed")
-        fs.delete(new org.apache.hadoop.fs.Path(s"$lateDir/day=$d"), true): Unit
-      } else fs.delete(stageP, true): Unit // stale stage, cold copy intact
+      if (!fs.exists(path(s"$dir/day=$d")))
+        require(fs.rename(path(s"$stage/day=$d"), path(s"$dir/day=$d")),
+          s"mergeDays: recovery of day=$d failed")
     }
-    val published = coldDays(spark, coldDir).toSet
-    val folded = dayDirs(spark, lateDir).filter(published.contains)
-    folded.foreach { d =>
-      val stageP = new org.apache.hadoop.fs.Path(s"$stage/day=$d")
-      val coldP = new org.apache.hadoop.fs.Path(s"$coldDir/day=$d")
-      val lateP = new org.apache.hadoop.fs.Path(s"$lateDir/day=$d")
-      val merged = Rollup.upsert(
-        spark.read.parquet(coldP.toString).select(col("path"), col("ts"), col("value")),
-        spark.read.parquet(lateP.toString).select(col("path"), col("ts"), col("value")))
-      merged.coalesce(1)
-        .sortWithinPartitions(col("path"), col("ts"))
-        .write.mode("overwrite").parquet(stageP.toString)
-      fs.delete(coldP, true)
-      require(fs.rename(stageP, coldP), s"lateFoldTick: publishing day=$d failed")
-      fs.delete(lateP, true)
+    fs.delete(path(stage), true)
+    if (days.nonEmpty) {
+      val incoming = points.select(col("path"), col("ts"), col("value"))
+      val held = days.toSet.intersect(dayDirs(spark, dir).toSet).toSeq
+      val existing =
+        if (held.isEmpty) incoming.limit(0)
+        else spark.read.parquet(held.map(d => s"$dir/day=$d"): _*)
+          .select(col("path"), col("ts"), col("value"))
+      Rollup.upsert(existing, incoming)
+        .withColumn("day", col("ts") - col("ts") % DaySeconds)
+        .repartition(col("day"))
+        .sortWithinPartitions(col("day"), col("path"), col("ts"))
+        .write.partitionBy("day").mode("overwrite").parquet(stage)
+      dayDirs(spark, stage).foreach { d =>
+        fs.delete(path(s"$dir/day=$d"), true)
+        require(fs.rename(path(s"$stage/day=$d"), path(s"$dir/day=$d")),
+          s"mergeDays: publishing day=$d failed")
+      }
+      fs.delete(path(stage), true)
     }
-    val stageRoot = new org.apache.hadoop.fs.Path(stage)
-    if (fs.exists(stageRoot)) fs.delete(stageRoot, true): Unit
-    folded
   }
 
   /** Maintained-store OBSERVABILITY (VERDICT r11 #7): one row per
     * section — hot, cold, late — with day count, row count, and file
     * count, so the failure modes the maintenance loop guards against
-    * (late accumulation, small-file regrowth, a stuck compactor) are
-    * VISIBLE as numbers before they degrade reads. The late section's
-    * steady state is (0, 0, 0) once [[lateFoldTick]] runs in the tick;
-    * growth there means a clock-skewed source is outrunning the fold.
-    * Day and row counts are data-derivable (the driver oracle
-    * recomputes them from the source routing); file counts are
-    * filesystem facts the spec pins.
+    * (small-file regrowth, a stuck compactor, a stuck late merge) are
+    * VISIBLE as numbers before they degrade reads. The late section
+    * counts `<cold>/_foldstage`: late rows [[mergeDays]] merged and
+    * staged but has not published yet. Its steady state is (0, 0, 0);
+    * anything else means a merge died mid-publish and the next tick's
+    * recovery pass has not run. Day and row counts are data-derivable
+    * (the `store_report` oracle recomputes them from the source
+    * routing); file counts are filesystem facts the spec pins.
     */
   def storeReport(spark: SparkSession, hotDir: String,
                   coldDir: String): DataFrame = {
@@ -390,7 +391,7 @@ object MetricStore {
       (name, days.size.toLong, nRows, nFiles)
     }
     Seq(section("cold", coldDir), section("hot", hotDir),
-      section("late", s"$hotDir/_late"))
+      section("late", s"$coldDir/_foldstage"))
       .toDF("section", "n_days", "n_rows", "n_files")
   }
 
@@ -400,35 +401,12 @@ object MetricStore {
     * ONCE, here, so the frame this returns reads one layout per day
     * for its whole lifetime — combined with the rename publication and
     * the deferred hot delete, a read concurrent with a maintenance
-    * tick sees the old layout or the new one, never a mix.
+    * tick sees the old layout or the new one, never a mix. Late points
+    * are already in cold ([[mergeDays]] folds them in the tick that
+    * receives them), so the read is a join-free union of two scans.
     */
   def readMaintained(spark: SparkSession, hotDir: String,
                      coldDir: String): DataFrame = {
-    val base = readMaintainedBase(spark, hotDir, coldDir)
-    // LATE overlay: points that arrived after their day published merge
-    // into `<hot>/_late` (the G6 upsert store — CarbonStream
-    // .maintainTick's late path). Whisper slot semantics are
-    // last-write-wins, and the late row is by construction the newest
-    // write for its slot, so the late copy displaces the base copy per
-    // (path, ts). Late arrivals are rare by contract, so the key set
-    // broadcasts — one map-side anti-join, never a corpus shuffle.
-    val late = s"$hotDir/_late"
-    val (fs, lp) = hadoopFs(spark, late)
-    val lateHasDays = fs.exists(lp) &&
-      fs.listStatus(lp).exists(_.getPath.getName.startsWith("day="))
-    if (!lateHasDays) base
-    else {
-      val lateDf = spark.read.parquet(late)
-        .select(col("path"), col("ts"), col("value"),
-          col("day").cast("long").as("day"))
-      base.join(broadcast(lateDf.select(col("path"), col("ts"))),
-          Seq("path", "ts"), "left_anti")
-        .unionByName(lateDf)
-    }
-  }
-
-  private def readMaintainedBase(spark: SparkSession, hotDir: String,
-                                 coldDir: String): DataFrame = {
     val cold = coldDays(spark, coldDir)
     // a hot store with no day dirs (brand-new store, or a paused
     // stream whose closed days all compacted) has no schema to infer —

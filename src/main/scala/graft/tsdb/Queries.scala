@@ -540,29 +540,12 @@ object Queries {
       Retention.parse("10m:1d,1h:7d,1d:60d"), "average", 0.0,
       fetchFrom + shiftSec, Now + shiftSec, Now)
 
-  /** Per-invocation (glob, shift) fetch memo with lineage truncation —
-    * the C9 planning fix (guide §3, very wide unions/joins: planning
-    * time itself becomes the bottleneck; materialise an intermediate).
-    * A gfn target referencing G globs (or one glob through several
-    * list functions) otherwise embeds G copies of the full
-    * archive-cascade subtree in ONE logical plan, and Catalyst
-    * planning — not execution — dominated the widest gfn queries
-    * (gfn_agg_lists: 6.3 s plan at sf0.1). `localCheckpoint` runs the
-    * fetch eagerly once per distinct (glob, shift) and replaces the
-    * subtree with its computed rows, so the function machinery plans
-    * over leaf-sized inputs. Results are identical (same rows); the
-    * memo lives only inside one query invocation — every bench/verify
-    * sample rebuilds it from the parquet inputs (no cross-run reuse).
-    */
-  private def fetchMemo(raw: (String, Long) => DataFrame): (String, Long) => DataFrame =
-    TargetExpr.memoFetch(raw)
-
   /** Parse + evaluate a render target through [[TargetExpr]] — every
     * C9 driver query exercises the PARSER, not hand-built combinator
     * chains, so the e2e surface is the one a Graphite client hits.
     */
   private def gfnEval(spark: SparkSession, dir: String, target: String): DataFrame =
-    TargetExpr.evalTargetAt(target, fetchMemo(gfnFetch(spark, dir)))
+    TargetExpr.evalTargetAt(target, TargetExpr.memoFetch(gfnFetch(spark, dir)))
       .select(col("path"), col("t"), round(col("value") - Eps, 4).as("value"))
       .orderBy(col("path"), col("t"))
 
@@ -926,7 +909,7 @@ object Queries {
     * timestamp.
     */
   def gfnConsolidate(spark: SparkSession, dir: String): DataFrame = {
-    val fm = fetchMemo(gfnFetch(spark, dir))
+    val fm = TargetExpr.memoFetch(gfnFetch(spark, dir))
     val f = TargetExpr
       .evalTargetAt("""consolidateBy(vera.u1?.click,"max")""", fm)
       .unionByName(TargetExpr.evalTargetAt("vera.u1?.view", fm))
@@ -995,7 +978,7 @@ object Queries {
       m.select(col("path")).distinct(),
       (pd, shiftSec) => Fetch.fetchByPaths(spark, m, pd, spec, "average",
         0.0, fetchFrom + shiftSec, Now + shiftSec, Now))
-    TargetExpr.evalTargetAt(target, fetchMemo(fetchAt), Some(env))
+    TargetExpr.evalTargetAt(target, TargetExpr.memoFetch(fetchAt), Some(env))
       .select(col("path"), col("t"), round(col("value"), 4).as("value"))
       .orderBy(col("path"), col("t"))
   }
@@ -1143,7 +1126,7 @@ object Queries {
     TargetExpr.evalTargetAt(
       """group(constantLine(42.5),threshold(95,"limit"),time("tick",21600),""" +
         """verticalLine("2024-01-25T12:00:00","deploy","blue"))""",
-      fetchMemo(gfnFetch(spark, dir)), None, Some(env))
+      TargetExpr.memoFetch(gfnFetch(spark, dir)), None, Some(env))
       .select(col("path"), col("t"), round(col("value") - Eps, 4).as("value"))
       .orderBy(col("path"), col("t"))
   }
@@ -1159,7 +1142,7 @@ object Queries {
   def gfnAliasQuery(spark: SparkSession, dir: String): DataFrame =
     TargetExpr.evalTargetAt(
       """aliasQuery(vera.u{0,1,2,4}.click,"\.click$",".view","views last=%d")""",
-      fetchMemo(gfnFetch(spark, dir)))
+      TargetExpr.memoFetch(gfnFetch(spark, dir)))
       .select(col("path"), col("t"), round(col("value") - Eps, 4).as("value"))
       .orderBy(col("path"), col("t"), col("value"))
 
@@ -1224,14 +1207,14 @@ object Queries {
     * ticks. LATE arrival is part of the drive (VERDICT r10 #2): a
     * deterministic slice of the FIRST third's points is held back and
     * delivered with the LAST batch — by then their days are published,
-    * so the tick routes them through the `_late` upsert store instead
-    * of crashing; the read folds them back in last-write-wins. A
-    * committed batch id is then REPLAYED (foreachBatch at-least-once)
-    * and must be a no-op. The read is MetricStore.readMaintained —
-    * cold wins per published day, hot serves the live tail, late
-    * overlays per slot — and must STILL equal the raw point multiset
-    * (lossless maintenance under late arrival and replay, the B15
-    * oracle shared).
+    * so the tick folds them straight into those cold days through
+    * MetricStore.mergeDays (last-write-wins, staged then swapped in)
+    * instead of crashing. A committed batch id is then REPLAYED
+    * (foreachBatch at-least-once) and must be a no-op. The read is
+    * MetricStore.readMaintained — cold wins per published day, hot
+    * serves the live tail — and must STILL equal the raw point
+    * multiset (lossless maintenance under late arrival and replay, the
+    * B15 oracle shared).
     */
   /** The shared G26 fixture: a 3-tick maintained ingest (day-ordered
     * thirds, held-back late stragglers delivered last, one replayed
@@ -1274,9 +1257,9 @@ object Queries {
   }
 
   /** G28: maintained-store observability — the per-section
-    * (days, rows) report over the SAME fixture store, so the fold's
-    * by-construction bound is a CHECKED number: late must read
-    * (0, 0) after the tick's drain, cold must hold every closed day's
+    * (days, rows) report over the SAME fixture store: late (merged
+    * rows staged but not yet published) must read (0, 0) once every
+    * tick's merge has published, cold must hold every closed day's
     * rows (on-time AND folded late), hot exactly the live tail plus
     * the last tick's grace copies. File counts are filesystem facts
     * the spec pins ([[MetricStore.storeReport]] returns them; this

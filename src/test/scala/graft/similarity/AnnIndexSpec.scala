@@ -18,7 +18,7 @@ class AnnIndexSpec extends SparkSpec {
     m = 8, kc = 16, iters = 1, rateBp = 5000)
 
   private def freshRoot(): String =
-    java.nio.file.Files.createTempDirectory("annidx-spec").toString
+    graft.core.Fixtures.fresh("annidx-spec")
 
   private def collected(df: org.apache.spark.sql.DataFrame) =
     df.orderBy("q_id", "rk")
@@ -116,7 +116,7 @@ class AnnIndexSpec extends SparkSpec {
     val q = AnnIndex.extendSink(
       source.toDF().toDF("vec_id", "embedding")
         .selectExpr("vec_id", "cast(embedding as array<float>) as embedding"),
-      root, java.nio.file.Files.createTempDirectory("annidx-ck").toString)
+      root, graft.core.Fixtures.fresh("annidx-ck"))
     try {
       source.addData(rows.filter(_._1 % 3 == 1).toSeq: _*)
       q.processAllAvailable()

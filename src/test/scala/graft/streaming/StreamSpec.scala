@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.SparkSpec
+import graft.core.Fixtures
 
 /** G1/G2: the carbon-cache streaming loop under MemoryStream — the
   * same plans the batch twin verifies against DuckDB, here exercised
@@ -118,7 +119,7 @@ class StreamSpec extends SparkSpec {
   test("stream upsert: late duplicate timestamp overwrites its slot (G6)") {
     import graft.streaming.CarbonStream.Point
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft-upsert").toString
+    val dir = Fixtures.fresh("graft-upsert")
     val source = MemoryStream[Point]
     val query = CarbonStream.upsertSink(source.toDS(), s"$dir/store", s"$dir/ckpt")
     try {
@@ -133,14 +134,21 @@ class StreamSpec extends SparkSpec {
       .select("path", "ts", "value").orderBy("path", "ts").collect()
       .map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
     // slot (a.b, 100) last-write-wins overwritten; untouched slots — and
-    // the untouched day-86400 partition — survive the dynamic overwrite
+    // the untouched day-86400 partition — survive the merge
     assert(out.toSeq == Seq(
       ("a.b", 100L, 9.0), ("a.b", 200L, 2.0), ("c.d", 90000L, 5.0)))
+    // the merge stages then swaps: one sorted file per day, nothing
+    // left in the stage
+    val store = new java.io.File(s"$dir/store")
+    assert(!new java.io.File(store, "_foldstage").exists)
+    val days = store.listFiles().filter(_.getName.startsWith("day="))
+    assert(days.map(_.getName).sorted.toSeq == Seq("day=0", "day=86400"))
+    days.foreach(d => assert(d.listFiles().count(_.getName.endsWith(".parquet")) == 1, d))
   }
 
   test("ingest sink lands day-partitioned parquet") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft-ingest").toString
+    val dir = Fixtures.fresh("graft-ingest")
     val source = MemoryStream[String]
     val query = CarbonStream.ingestSink(source.toDF().toDF("line"), 999L,
       s"$dir/data", s"$dir/ckpt")
@@ -157,7 +165,7 @@ class StreamSpec extends SparkSpec {
   }
 
   test("exactly-once upsert: a replayed batch id is a file-level no-op (G6)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-eo").toString
+    val dir = Fixtures.fresh("graft-eo")
     def df(rows: (String, Long, Double)*) = rows.toDF("path", "ts", "value")
     def snapshot: Seq[(String, Long, Long)] = {
       def walk(f: java.io.File): Seq[java.io.File] =
@@ -176,7 +184,7 @@ class StreamSpec extends SparkSpec {
     val want = Seq(("a.x", 100L, 9.0), ("a.x", 160L, 2.0))
     assert(values == want)
     // replayed batch id: merge skipped, store BYTES untouched (same
-    // files, sizes, mtimes — no dynamic-partition rewrite)
+    // files, sizes, mtimes — no rewrite)
     assert(!CarbonStream.mergeBatchOnce(incoming, dir, 1L))
     assert(snapshot == committed)
     assert(values == want)
@@ -192,7 +200,7 @@ class StreamSpec extends SparkSpec {
 
   test("maintained tick: replayed committed batch is a file-level no-op; crash window converges (G26)") {
     import graft.tsdb.MetricStore
-    val tmp = java.nio.file.Files.createTempDirectory("graft-maint-eo").toString
+    val tmp = Fixtures.fresh("graft-maint-eo")
     val (hot, cold) = (s"$tmp/hot", s"$tmp/cold")
     def df(rows: (String, Long, Double)*) = rows.toDF("path", "ts", "value")
     def snapshot(dir: String): Seq[(String, Long, Long)] = {
@@ -227,18 +235,21 @@ class StreamSpec extends SparkSpec {
     assert(snapshot(cold) == committed._2)
     assert(values == want)
     // crash window where the lost tick had PUBLISHED the batch's days:
-    // the replay routes those points through the late store and the
-    // last-write-wins overlay converges — still no duplicates
+    // the replay merges those points straight into cold last-write-wins
+    // — still no duplicates, and no side store
     fs.delete(new org.apache.hadoop.fs.Path(s"$hot/_txn/1"), false)
     assert(CarbonStream.maintainTickOnce(
       b1.unionByName(df(("a.x", 90060L, 4.0))), hot, cold, 1L))
     assert(values == (want :+ ("a.x", 90060L, 4.0)).sorted)
+    assert(!new java.io.File(s"$hot/_late").exists)
+    assert(new java.io.File(s"$cold/day=86400").listFiles()
+      .count(_.getName.endsWith(".parquet")) == 1)
   }
 
   test("maintained ingest: closed days compact while the live day appends (G26)") {
     import graft.tsdb.MetricStore
     implicit val sqlCtx = spark.sqlContext
-    val tmp = java.nio.file.Files.createTempDirectory("graft-maint").toString
+    val tmp = Fixtures.fresh("graft-maint")
     val (hot, cold) = (s"$tmp/hot", s"$tmp/cold")
     val source = MemoryStream[String]
     val query = CarbonStream.ingestSinkMaintained(source.toDF().toDF("line"),
@@ -277,7 +288,7 @@ class StreamSpec extends SparkSpec {
   test("maintained sink with retention: old days age out as the stream advances (G26r)") {
     import graft.tsdb.MetricStore
     implicit val sqlCtx = spark.sqlContext
-    val tmp = java.nio.file.Files.createTempDirectory("graft-maint-ret").toString
+    val tmp = Fixtures.fresh("graft-maint-ret")
     val (hot, cold) = (s"$tmp/hot", s"$tmp/cold")
     val day = MetricStore.DaySeconds
     val source = MemoryStream[String]
@@ -302,10 +313,9 @@ class StreamSpec extends SparkSpec {
   }
 
   test("production loop over the MAINTAINED store: ingest+compact -> archives -> fetch (G26)") {
-    import java.nio.file.Files
     import graft.tsdb.{Fetch, MetricStore, Retention}
     implicit val sqlCtx = spark.sqlContext
-    val tmp = Files.createTempDirectory("graft-e2e-maint").toString
+    val tmp = Fixtures.fresh("graft-e2e-maint")
     val source = MemoryStream[String]
     // 1. stream lines through the MAINTAINED sink — day 0 compacts to
     //    cold when day 1 appears; the live day keeps appending in hot
@@ -340,10 +350,9 @@ class StreamSpec extends SparkSpec {
   }
 
   test("production loop: stream ingest -> archive store -> pruned fetch") {
-    import java.nio.file.Files
     import graft.tsdb.{Fetch, MetricStore, Retention}
     implicit val sqlCtx = spark.sqlContext
-    val tmp = Files.createTempDirectory("graft-e2e").toString
+    val tmp = Fixtures.fresh("graft-e2e")
     val source = MemoryStream[String]
     // 1. stream plaintext lines into the day-partitioned raw store
     val q = CarbonStream.ingestSink(source.toDF().toDF("line"), 999L,

@@ -1,8 +1,8 @@
 package graft.tsdb
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
+import graft.core.Fixtures
 
 /** MetricStore: day-partitioned persistence must (a) round-trip fetch
   * results identical to the in-memory path, (b) prune partitions by
@@ -19,7 +19,7 @@ class MetricStoreSpec extends SparkSpec {
   ).toDF("path", "ts", "value")
 
   lazy val root: String = {
-    val dir = Files.createTempDirectory("graft-store").toString
+    val dir = Fixtures.fresh("graft-store")
     MetricStore.writeArchives(metrics, spec, "average", 0.0, dir)
     dir
   }
@@ -60,7 +60,7 @@ class MetricStoreSpec extends SparkSpec {
       ("a.x.v", 90000L, 2.0), ("a.x.v", 90030L, 4.0), ("a.x.v", 90060L, 10.0),
       ("a.y.w", 90000L, 10.0), ("a.y.w", 90120L, 20.0)) // default avg rule
       .toDF("path", "ts", "value")
-    val root = Files.createTempDirectory("graft-conf-store").toString
+    val root = Fixtures.fresh("graft-conf-store")
     val combos = MetricStore.writeArchivesConf(pts, schemas, aggs, root)
     // two rule groups, in sorted combo order
     assert(combos == Seq(("10m:30d", "average", 0.0), ("1m:1d,10m:30d", "sum", 0.0)))
@@ -79,14 +79,14 @@ class MetricStoreSpec extends SparkSpec {
     assert(grids("a.x.v") > grids("a.y.w")) // 60s steps vs 600s steps
     // one-rule conf ≡ the global-spec store (writeArchives is the
     // special case)
-    val oneRoot = Files.createTempDirectory("graft-conf-one").toString
+    val oneRoot = Fixtures.fresh("graft-conf-one")
     MetricStore.writeArchivesConf(pts,
       Conf.storageSchemas("[all]\npattern = .*\nretentions = 1m:1d,10m:30d\n"),
       Conf.storageAggregation("[all]\npattern = .*\naggregationMethod = average\nxFilesFactor = 0\n"),
       oneRoot)
     val viaConf = MetricStore.fetchStoredConf(spark, oneRoot, "a.*.*", 89940L, now, now)
       .orderBy("path", "t").collect().map(_.toSeq).toSeq
-    val globalRoot = Files.createTempDirectory("graft-conf-global").toString
+    val globalRoot = Fixtures.fresh("graft-conf-global")
     MetricStore.writeArchives(pts, Retention.parse("1m:1d,10m:30d"), "average", 0.0, globalRoot)
     val viaGlobal = MetricStore.fetchStored(spark, globalRoot,
         Retention.parse("1m:1d,10m:30d"), "a.*.*", 89940L, now, now)
@@ -102,7 +102,7 @@ class MetricStoreSpec extends SparkSpec {
     val pts = (0L until 120L).map(i =>
       (s"m.${i % 5}", i * 1200L, i.toDouble)).toDF("path", "ts", "value")
       .withColumn("day", col("ts") - col("ts") % MetricStore.DaySeconds)
-    val raw = Files.createTempDirectory("graft-compact-raw").toString
+    val raw = Fixtures.fresh("graft-compact-raw")
     for (k <- 0 until 3)
       pts.filter((col("ts") / 1200L) % 3 === k).repartition(4)
         .write.partitionBy("day").mode("append").parquet(raw)
@@ -111,7 +111,7 @@ class MetricStoreSpec extends SparkSpec {
       .map(d => d.getName -> d.listFiles().count(_.getName.endsWith(".parquet")))
       .toMap
     assert(files(raw).values.forall(_ >= 3), files(raw).toString) // fragmented
-    val dst = Files.createTempDirectory("graft-compact-dst").toString
+    val dst = Fixtures.fresh("graft-compact-dst")
     MetricStore.compactRaw(spark, raw, dst)
     // one file per closed day
     assert(files(dst).values.forall(_ == 1), files(dst).toString)
@@ -129,7 +129,7 @@ class MetricStoreSpec extends SparkSpec {
       .map(r => (r.getString(0), r.getLong(1))).toSeq
     assert(inFile == inFile.sorted, inFile.take(10).toString)
     // beforeDay gate: only closed days move
-    val dst2 = Files.createTempDirectory("graft-compact-dst2").toString
+    val dst2 = Fixtures.fresh("graft-compact-dst2")
     MetricStore.compactRaw(spark, raw, dst2, beforeDay = MetricStore.DaySeconds)
     assert(files(dst2).keySet == Set("day=0"), files(dst2).toString)
   }
@@ -140,8 +140,8 @@ class MetricStoreSpec extends SparkSpec {
     val pts = (0L until 90L).map(i => (s"m.${i % 3}", i * 2880L, i.toDouble))
       .toDF("path", "ts", "value")
       .withColumn("day", col("ts") - col("ts") % day)
-    val hot = Files.createTempDirectory("graft-maint-hot").toString
-    val cold = Files.createTempDirectory("graft-maint-cold").toString
+    val hot = Fixtures.fresh("graft-maint-hot")
+    val cold = Fixtures.fresh("graft-maint-cold")
     for (k <- 0 until 3)
       pts.filter(col("ts") % 3 === k).repartition(4)
         .write.partitionBy("day").mode("append").parquet(hot)
@@ -175,18 +175,23 @@ class MetricStoreSpec extends SparkSpec {
     new java.io.File(s"$cold/_staging/day=${3 * day}").mkdirs()
     assert(MetricStore.coldDays(spark, cold) == Seq(0L, day))
     assert(multiset(MetricStore.readMaintained(spark, hot, cold)) == want)
-    // published days are immutable — a late point for one neither
-    // kills the tick nor lands twice: it routes through the `_late`
-    // upsert store (VERDICT r10 #2) and the maintained read overlays
-    // it last-write-wins per slot. (m.0, 0) OVERWRITES an existing
-    // slot; (m.0, 60) fills a NEW slot in the published day.
+    // a late point for a published day neither kills the tick nor
+    // lands twice: the tick merges it straight into the cold day
+    // last-write-wins per slot (VERDICT r10 #2), staged then swapped in.
+    // (m.0, 0) OVERWRITES an existing slot; (m.0, 60) fills a NEW slot
+    // in the published day.
     graft.streaming.CarbonStream.maintainTick(
       Seq(("m.0", 60L, 9.9), ("m.0", 0L, 7.7)).toDF("path", "ts", "value"),
       hot, cold, batchId = 99L)
-    assert(new java.io.File(s"$hot/_late").exists)
+    assert(!new java.io.File(s"$hot/_late").exists)
+    assert(!new java.io.File(s"$cold/_foldstage").exists)
     assert(dayDirs(cold) == Seq("day=0", s"day=$day")) // nothing reopened
+    assert(new java.io.File(s"$cold/day=0").listFiles()
+      .count(_.getName.endsWith(".parquet")) == 1)
     val wantLate = (want.filterNot(p => p._1 == "m.0" && p._2 == 0L) ++
       Seq(("m.0", 60L, 9.9), ("m.0", 0L, 7.7))).sorted
+    assert(multiset(spark.read.parquet(s"$cold/day=0")) ==
+      wantLate.filter(_._2 < day))
     assert(multiset(MetricStore.readMaintained(spark, hot, cold)) == wantLate)
     // a REPLAYED late delivery converges (G6 last-write-wins): same
     // multiset, no duplicates
@@ -195,8 +200,8 @@ class MetricStoreSpec extends SparkSpec {
       hot, cold, batchId = 100L)
     assert(multiset(MetricStore.readMaintained(spark, hot, cold)) == wantLate)
     // RETENTION ageing (whisper maxRetention): dropping days before a
-    // horizon is exact at day granularity — late-store days age too,
-    // days at/after the horizon survive untouched
+    // horizon is exact at day granularity — the late-merged day ages
+    // like any other, days at/after the horizon survive untouched
     assert(MetricStore.retentionVacuum(spark, hot, cold, day) == Seq(0L))
     assert(dayDirs(cold) == Seq(s"day=$day"))
     val wantAged = wantLate.filter(_._2 >= day)
@@ -207,21 +212,20 @@ class MetricStoreSpec extends SparkSpec {
     // a hot store with no day dirs (fresh store / every closed day
     // compacted) still answers from cold — never a schema-inference
     // throw; a fully-empty store reads as typed empty
-    val hotEmpty = Files.createTempDirectory("graft-maint-hotempty").toString
+    val hotEmpty = Fixtures.fresh("graft-maint-hotempty")
     assert(multiset(MetricStore.readMaintained(spark, hotEmpty, cold)) ==
       multiset(spark.read.parquet(cold)))
-    val coldEmpty = Files.createTempDirectory("graft-maint-coldempty").toString
+    val coldEmpty = Fixtures.fresh("graft-maint-coldempty")
     assert(MetricStore.readMaintained(spark, hotEmpty, coldEmpty).isEmpty)
   }
 
   test("late fold: sustained lateness drains into cold, read goes join-free (r11 #1)") {
     val day = MetricStore.DaySeconds
-    val hot = Files.createTempDirectory("graft-fold-hot").toString
-    val cold = Files.createTempDirectory("graft-fold-cold").toString
+    val hot = Fixtures.fresh("graft-fold-hot")
+    val cold = Fixtures.fresh("graft-fold-cold")
     def multiset(df: org.apache.spark.sql.DataFrame) =
       df.select("path", "ts", "value").collect()
         .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).sorted.toSeq
-    def lateDays = MetricStore.dayDirs(spark, s"$hot/_late")
     // tick 0: two days on-time — day 0 publishes, day 1 stays live
     graft.streaming.CarbonStream.maintainTick(
       Seq(("m", 0L, 1.0), ("m", 60L, 2.0), ("m", day, 3.0))
@@ -240,48 +244,52 @@ class MetricStoreSpec extends SparkSpec {
           .toDF("path", "ts", "value"), hot, cold, k.toLong)
       want = want.filterNot(p => p._2 == 60L) ++
         Seq(("m", lateTs, k.toDouble), ("m", 60L, 10.0 + k), ("m", (k + 1) * day, 5.0))
-      // the fold ran IN the tick: no unfolded late day survives it
-      assert(lateDays.isEmpty, s"tick $k left unfolded late days: $lateDays")
+      // the merge ran IN the tick: no side store, nothing left staged,
+      // and the touched cold day is still one file
+      assert(!new java.io.File(s"$hot/_late").exists)
+      assert(MetricStore.dayDirs(spark, s"$cold/_foldstage").isEmpty)
+      assert(new java.io.File(s"$cold/day=0").listFiles()
+        .count(_.getName.endsWith(".parquet")) == 1)
       assert(multiset(MetricStore.readMaintained(spark, hot, cold)) == want.sorted)
     }
-    // TRANSIENT late (merged but not yet folded — the mid-tick window):
-    // the overlay is ONE broadcast anti-join on the K-row key set,
-    // never a shuffled join against the stores
-    graft.streaming.CarbonStream.mergeBatch(
-      Seq(("m", 45L, 7.0)).toDF("path", "ts", "value"), s"$hot/_late")
-    val planLate = MetricStore.readMaintained(spark, hot, cold)
-      .queryExecution.executedPlan.toString
-    assert(planLate.contains("BroadcastHashJoin"), planLate.take(3000))
-    assert(!planLate.contains("SortMergeJoin") &&
-      !planLate.contains("ShuffledHashJoin"), planLate.take(3000))
-    // the fold drains it; the overlay short-circuits away: join-free
-    assert(MetricStore.lateFoldTick(spark, hot, cold) == Seq(0L))
+    // one more late tick: the read after it is a join-free union of
+    // scans (late points live in cold, no overlay to apply)
+    graft.streaming.CarbonStream.maintainTick(
+      Seq(("m", 45L, 7.0)).toDF("path", "ts", "value"), hot, cold, 5L)
     want = want :+ (("m", 45L, 7.0))
     assert(multiset(MetricStore.readMaintained(spark, hot, cold)) == want.sorted)
     val plan = MetricStore.readMaintained(spark, hot, cold)
       .queryExecution.optimizedPlan.toString
     assert(!plan.toLowerCase.contains("join"), plan)
-    // published day 0 is still ONE file (the fold rewrites, not appends)
+    // published day 0 is still ONE file (the merge rewrites, not appends)
     assert(new java.io.File(s"$cold/day=0").listFiles()
       .count(_.getName.endsWith(".parquet")) == 1)
-    // CRASH RECOVERY: simulate a fold that died between move-out and
+    // CRASH RECOVERY: simulate a merge that died between move-out and
     // publish — stage holds the merged day, cold copy missing; the next
-    // tick's recovery pass finishes the rename
+    // mergeDays call's recovery pass finishes the rename
     val fs = new org.apache.hadoop.fs.Path(cold)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val before = multiset(MetricStore.readMaintained(spark, hot, cold))
     fs.mkdirs(new org.apache.hadoop.fs.Path(s"$cold/_foldstage"))
     assert(fs.rename(new org.apache.hadoop.fs.Path(s"$cold/day=0"),
       new org.apache.hadoop.fs.Path(s"$cold/_foldstage/day=0")))
-    assert(MetricStore.lateFoldTick(spark, hot, cold).isEmpty) // recovery only
+    assert(!MetricStore.coldDays(spark, cold).contains(0L))
+    MetricStore.mergeDays(spark, cold, spark.emptyDataFrame, Seq.empty) // recovery only
     assert(MetricStore.coldDays(spark, cold).contains(0L))
+    assert(!new java.io.File(s"$cold/_foldstage").exists)
+    assert(multiset(MetricStore.readMaintained(spark, hot, cold)) == before)
+    // a STALE stage (live copy still present: the merge died before its
+    // publish) drops, and the live day is untouched
+    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$cold/_foldstage/day=0"))
+    MetricStore.mergeDays(spark, cold, spark.emptyDataFrame, Seq.empty)
+    assert(!new java.io.File(s"$cold/_foldstage").exists)
     assert(multiset(MetricStore.readMaintained(spark, hot, cold)) == before)
   }
 
   test("retention horizon persists: an aged-out day cannot resurrect (ADVICE r11)") {
     val day = MetricStore.DaySeconds
-    val hot = Files.createTempDirectory("graft-hor-hot").toString
-    val cold = Files.createTempDirectory("graft-hor-cold").toString
+    val hot = Fixtures.fresh("graft-hor-hot")
+    val cold = Fixtures.fresh("graft-hor-cold")
     def multiset(df: org.apache.spark.sql.DataFrame) =
       df.select("path", "ts", "value").collect()
         .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).sorted.toSeq
@@ -306,25 +314,34 @@ class MetricStoreSpec extends SparkSpec {
 
   test("store report: day/row/file counts per section, late drains to zero (r11 #7)") {
     val day = MetricStore.DaySeconds
-    val hot = Files.createTempDirectory("graft-rep-hot").toString
-    val cold = Files.createTempDirectory("graft-rep-cold").toString
+    val hot = Fixtures.fresh("graft-rep-hot")
+    val cold = Fixtures.fresh("graft-rep-cold")
     graft.streaming.CarbonStream.maintainTick(
       Seq(("m", 0L, 1.0), ("m", 60L, 2.0), ("m", day, 3.0))
         .toDF("path", "ts", "value"), hot, cold, 0L)
     graft.streaming.CarbonStream.maintainTick(
       Seq(("m", 30L, 9.0), ("m", 2 * day, 4.0)) // one late, one on-time
         .toDF("path", "ts", "value"), hot, cold, 1L)
-    val rep = MetricStore.storeReport(spark, hot, cold)
+    def report = MetricStore.storeReport(spark, hot, cold)
       .collect().map(r => r.getString(0) ->
         ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
-    // cold: days 0 and `day` published; day 0 carries the folded late
+    val rep = report
+    // cold: days 0 and `day` published; day 0 carries the merged late
     // point → 3 rows
     assert(rep("cold")._1 == 2 && rep("cold")._2 == 4)
-    // late drained by the tick's fold
+    // late: nothing left staged once the tick's merge has published
     assert(rep("late") == ((0L, 0L, 0L)))
     // hot: the live day plus the grace copy of the day tick 1 published
     assert(rep("hot")._1 == 2 && rep("hot")._2 == 2)
     assert(rep("cold")._3 >= 2) // at least one file per published day
+    // a merge that died between move-out and publish: day 0 sits staged,
+    // and the late section shows it until the next merge's recovery
+    new java.io.File(s"$cold/_foldstage").mkdirs()
+    assert(new java.io.File(s"$cold/day=0")
+      .renameTo(new java.io.File(s"$cold/_foldstage/day=0")))
+    assert(report("late") == ((1L, 3L, 1L)))
+    MetricStore.mergeDays(spark, cold, spark.emptyDataFrame, Seq.empty)
+    assert(report("late") == ((0L, 0L, 0L)) && report("cold") == rep("cold"))
   }
 
   test("glob literal prefix reaches the scan as StringStartsWith") {

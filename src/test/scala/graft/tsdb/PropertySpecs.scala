@@ -136,7 +136,7 @@ object WhisperRingProps extends Properties("WhisperRing") {
   import graft.sources.Whisper
 
   private def tmpFile(): String =
-    Files.createTempDirectory("wring").resolve("m.wsp").toString
+    Paths.get(graft.core.Fixtures.fresh("wring"), "m.wsp").toString
 
   // 3-level chains with strictly increasing retention and exact
   // spp-multiple levels (the Retention validity rules): p1 > p0/f1 and

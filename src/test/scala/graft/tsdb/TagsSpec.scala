@@ -170,7 +170,7 @@ class TagsSpec extends SparkSpec {
   }
 
   test("tag index artifact: merge == rebuild, re-merge no-op, indexed autocomplete") {
-    val dir = java.nio.file.Files.createTempDirectory("tagidx").toString
+    val dir = graft.core.Fixtures.fresh("tagidx")
     val half = pathsDf("cpu;dc=east;host=web1", "disk.used")
     Tags.writeTagIndex(half, dir)
     // merge the full universe: only the three new paths append

@@ -12,7 +12,7 @@ import graft.sources.Whisper
 class WhisperSpec extends SparkSpec {
 
   private def tmpDir(): String =
-    Files.createTempDirectory("wsp").toString
+    graft.core.Fixtures.fresh("wsp")
 
   test("pack units have the exact reference byte sizes") {
     assert(Whisper.packPoint(0L, 0.0).length == Whisper.PointSize)
